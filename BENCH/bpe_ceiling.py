@@ -11,7 +11,8 @@ is O(applied merges), independent of the merge-LIST length.
 
 Protocol: one window, interleaved (nested, batch, nested, batch ...) at
 each tier, best-of-N per (path, tier); merges trained ONCE with
-bpe_train_batched(batch_k=16) on the same corpus. Tiers where the nested
+bpe_train on the same corpus (one vocab scan per merge, so the
+training step dominates the script's wall time at high --max-merges). Tiers where the nested
 path cannot run (analysis error / codegen failure) are recorded as
 "failed". Prints one JSON line.
 
@@ -41,8 +42,7 @@ def main() -> int:
     # same driver-heap sizing rationale as bench.py: one local JVM hosts
     # every executor thread + the 1k-round training loop's bookkeeping
     os.environ.setdefault("WEBEXTRACT_DRIVER_MEM", "16g")
-    from webextract.bpe import SEP, bpe_apply, bpe_apply_batch, \
-        bpe_train_batched
+    from webextract.bpe import SEP, bpe_apply, bpe_apply_batch, bpe_train
     from webextract.session import get_spark
 
     spark = get_spark(master=f"local[{args.cpus}]", shuffle_partitions=16)
@@ -51,7 +51,7 @@ def main() -> int:
     n_docs = docs.count()
 
     t0 = time.time()
-    trained = (bpe_train_batched(docs, n_merges=args.max_merges, batch_k=16)
+    trained = (bpe_train(docs, n_merges=args.max_merges)
                .orderBy("step").collect())
     merges = [r.left + SEP + r.right for r in trained]
     train_s = round(time.time() - t0, 2)

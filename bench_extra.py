@@ -26,18 +26,25 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "src
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> None:
+def _at_least_one(v: str) -> int:
+    n = int(v)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--cpus", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    ap.add_argument("--reps", type=int, default=2)
+    ap.add_argument("--reps", type=_at_least_one, default=2)
     ap.add_argument("--explain", default=None,
                     help="directory to write <name>_<suffix>.txt plans into")
     ap.add_argument("--suffix", default="before")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     os.environ.setdefault("WEBEXTRACT_DRIVER_MEM", "16g")
     import __spark_entry__ as entry

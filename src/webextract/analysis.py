@@ -75,34 +75,6 @@ def stopword_hits_any(col: Column | str, words: list[str]) -> Column:
 EN_STOPWORDS = ["the", "and", "of", "to", "in"]
 
 
-def quality_columns(text_col: str = "text",
-                    stopwords: list[str] | None = None) -> list[Column]:
-    """The standard quality-signal projection for a text table."""
-    sw = stopwords or EN_STOPWORDS
-    ntok = token_count(text_col)
-    hits = stopword_hits_any(text_col, sw)
-    c = F.col(text_col)
-    alpha = F.length(F.regexp_replace(c, r"[^A-Za-z]", ""))
-    return [
-        F.length(c).alias("n_chars_measured"),
-        ntok.alias("n_tokens"),
-        hits.alias("stopword_hits"),
-        F.round(F.when(ntok == 0, F.lit(0.0)).otherwise(hits / ntok.cast("double")), 6)
-            .cast("double").alias("stopword_ratio"),
-        F.round(F.when(F.length(c) == 0, F.lit(0.0))
-                 .otherwise(alpha / F.length(c).cast("double")), 6)
-            .cast("double").alias("alpha_ratio"),
-        F.round(F.when(ntok == 0, F.lit(0.0))
-                 .otherwise(F.length(c).cast("double") / ntok.cast("double")), 6)
-            .cast("double").alias("mean_token_len"),
-    ]
-
-
-def quality_df(df: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
-    return df.select(id_col, *quality_columns(text_col))
-
-
 # ---------------------------------------------------------------------------
 # language identification (stopword-profile heuristic)
 # ---------------------------------------------------------------------------
@@ -133,13 +105,6 @@ def langid_columns(text_col: str = "text") -> tuple[list[Column], Column]:
         .otherwise(F.lit("fr"))
     )
     return hit_cols, pred
-
-
-def langid_df(df: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
-    hit_cols, pred = langid_columns(text_col)
-    return df.select(id_col, *hit_cols).withColumn("predicted_lang", pred) \
-             .select(id_col, "predicted_lang")
 
 
 # ---------------------------------------------------------------------------

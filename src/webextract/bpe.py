@@ -166,76 +166,6 @@ def bpe_train(docs: DataFrame, *, n_merges: int,
                 "pair_count long")
 
 
-def bpe_train_batched(docs: DataFrame, *, n_merges: int, batch_k: int = 8,
-                      text_col: str = "text") -> DataFrame:
-    """BPE training with MULTI-MERGE rounds: each |vocab| scan selects up
-    to ``batch_k`` symbol-DISJOINT pairs from one frequency snapshot
-    (descending count, lexicographic tie-break) and applies them all
-    before the next scan — cutting driver round-trips from ``n_merges``
-    to ~``n_merges / batch_k``, the standard distributed-BPE batching.
-
-    SEMANTICS (deterministic variant, pinned by tests): disjointness makes
-    the batched applications commute and keeps every selected pair's own
-    count exact (merging (a,b) only perturbs counts of pairs containing a
-    or b), so each batch equals sequentially applying its members in
-    snapshot order. The sequence can diverge from single-merge
-    :func:`bpe_train` only when a merge's NEWLY CREATED pair (x, ab)
-    outranks a later batch member — classic greedy would take (x, ab)
-    next, the batch has already committed. ``batch_k=1`` is exactly
-    classic (differential-tested); larger k is the documented
-    throughput/fidelity trade every distributed trainer makes. Output
-    schema matches :func:`bpe_train` (step = global merge index in
-    applied order; pair_count = the snapshot count).
-    """
-    spark = docs.sparkSession
-    reps = (word_counts(docs, text_col=text_col)
-            .select("cnt", _initial_rep().alias("rep"))
-            .persist())
-    reps.count()
-    merges: list[tuple[int, str, str, str, int]] = []
-    try:
-        while len(merges) < n_merges:
-            want = min(batch_k, n_merges - len(merges))
-            # over-fetch: disjointness filtering drops some of the top rows
-            top = (_pair_counts(reps)
-                   .orderBy(F.col("c").desc(), F.col("pair"))
-                   .limit(want * 4 + 8).collect())
-            if not top:
-                break
-            used: set[str] = set()
-            picked: list[tuple[str, int]] = []
-            for row in top:
-                left, right = row["pair"].split(SEP)
-                fused = left + right
-                # a batch member must not share a symbol with any earlier
-                # member (count independence) NOR with its fused output
-                # (a later member matching the new symbol would see stale
-                # counts)
-                if used & {left, right, fused}:
-                    continue
-                picked.append((row["pair"], int(row["c"])))
-                used |= {left, right, fused}
-                if len(picked) == want:
-                    break
-            rep_sql = "rep"
-            for pair, c in picked:
-                left, right = pair.split(SEP)
-                merges.append((len(merges), left, right, left + right, c))
-                rep_sql = merge_expr(pair, rep_sql)
-            # eager localCheckpoint: see bpe_train — truncates the
-            # one-replace-layer-per-round logical plan that OOMs the
-            # driver's plan stringification at production merge counts
-            nxt = (reps.select("cnt", F.expr(rep_sql).alias("rep"))
-                   .localCheckpoint(eager=True))
-            reps.unpersist()
-            reps = nxt
-    finally:
-        reps.unpersist()
-    return spark.createDataFrame(
-        merges, "step int, left string, right string, merged string, "
-                "pair_count long")
-
-
 def _doc_rep(text_col: str):
     """Whole-document anchored symbol string: each word's chars + END_WORD,
     all SEP-delimited: '|a|b|</w>|c|</w>|'.

@@ -122,8 +122,10 @@ def cmd_curate(args) -> int:
     out, report = curate(inp, lang_rates=rates,
                          default_permille=args.default_permille,
                          near_dup=not args.no_near_dup)
-    out.write.mode("overwrite").parquet(args.output)
-    out.unpersist()
+    try:
+        out.write.mode("overwrite").parquet(args.output)
+    finally:
+        out.unpersist()  # curate returns the persisted frame
     print(json.dumps({"output": args.output, "stages": report}))
     return 0
 
@@ -141,8 +143,10 @@ def cmd_prep(args) -> int:
         docs, bench, capacity=args.capacity, shards=args.shards,
         gram_n=args.gram_n, text_col=args.text_col, id_col=args.id_col,
         source_col=args.source_col)
-    out.write.mode("overwrite").parquet(args.output)
-    out.unpersist()  # pretrain_prep returns the persisted frame
+    try:
+        out.write.mode("overwrite").parquet(args.output)
+    finally:
+        out.unpersist()  # pretrain_prep returns the persisted frame
     print(json.dumps({"output": args.output, "stages": report}))
     return 0
 

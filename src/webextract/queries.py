@@ -644,14 +644,6 @@ def q14(spark, sf_dir):
     )
 
 
-def _dot_expr(a: str, b: str):
-    """Sequential left-fold dot product (matches DuckDB list_dot_product)."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-
-
 @register(
     "q15_cosine_topk",
     """
@@ -672,6 +664,8 @@ def _dot_expr(a: str, b: str):
     doc="brute-force cosine top-k ANN baseline over the embedding column",
 )
 def q15(spark, sf_dir):
+    from .sim import _dot, _norm
+
     e = _t(spark, sf_dir, "embeddings")
     qrow = e.filter(F.col("vec_id") == 0).select("embedding").first()
     qv = [float(x) for x in qrow.embedding]
@@ -681,8 +675,7 @@ def q15(spark, sf_dir):
         .withColumn("qv", lit_q)
         .withColumn(
             "cos",
-            _dot_expr("embedding", "qv")
-            / (F.sqrt(_dot_expr("embedding", "embedding")) * F.sqrt(_dot_expr("qv", "qv"))),
+            _dot("embedding", "qv") / (_norm("embedding") * _norm("qv")),
         )
     )
     return (
@@ -757,8 +750,8 @@ _MH_AB = _mh_consts(_MH_PERM)
 
 # CTE body + final select kept separate so q37 can reuse the whole pair
 # pipeline as the edge source of its recursive-CTE oracle; parameterized on
-# (source relation, id column) so __spark_entry__'s q58 curate oracle can
-# run the SAME MinHash+LSH pair pipeline over its landed stage table
+# (source relation, id column) so the q58 curate oracle (landed_queries)
+# can run the SAME MinHash+LSH pair pipeline over its landed stage table
 def _mh_pair_ctes(src: str, id_sql: str) -> str:
     """DuckDB CTE chain: ``src``(id, text) → banded-LSH candidate pairs with
     signature-estimated Jaccard (twin of dedup.minhash_lsh_pairs with n=2,
@@ -851,9 +844,12 @@ JOIN (SELECT cluster_id, COUNT(*) AS cluster_size
         "groups so one canonical doc survives per cluster even when "
         "similarity is non-transitive. Each round is one shuffle keyed on "
         "the 8-byte vertex id; LSH components are quasi-cliques so 2-3 "
-        "rounds close at any corpus size (large-star/small-star is the "
-        "documented long-chain upgrade). Oracle: DuckDB recursive CTE "
-        "computes min-reachable-id per vertex over the same pair SQL.",
+        "rounds close at any corpus size. Large-star/small-star "
+        "(dedup.connected_components_star, pinned by q80) is the long-chain "
+        "alternative: on this graph Hash-Min runs fewer jobs, on q80's "
+        "chains star does, so each keeps the graph shape it wins on. "
+        "Oracle: DuckDB recursive CTE computes min-reachable-id per vertex "
+        "over the same pair SQL.",
 )
 def q37(spark, sf_dir):
     from .dedup import connected_components, minhash_lsh_pairs
@@ -1823,7 +1819,8 @@ _IVF_NPROBE, _IVF_K = 3, 20
 def _centroid_case_sql(C: list[list[float]]):
     """(dcols, cell_case, lits) for a literal-centroid CASE argmax over a
     relation exposing the vector as ``e`` — the SINGLE DuckDB twin of
-    sim.ivf_assign_expr's first-max tie-break (``>=``, lowest index wins).
+    sim.ivf_assign_pandas_exact's first-max tie-break (``>=``, lowest index
+    wins).
     q26 (IVF probe) and q68 (SemDeDup clustering) both depend on this
     staying bit-identical to the engine fold; keep it in one place for the
     same reason _md5h_sql exists."""
@@ -1848,7 +1845,7 @@ def _q26_sql() -> str:
     to a trained model): the L2-normalized centroids from
     :mod:`webextract.ivf_snapshot` are embedded as literals in BOTH engines,
     cell assignment is a first-max CASE over sequential-fold dots (bit-equal
-    to sim.ivf_assign_expr), probe ranking orders cells by dot(centroid,
+    to sim.ivf_assign_pandas_exact), probe ranking orders cells by dot(centroid,
     query) with the same tie-break, and the final cosine is the q15-proven
     list_dot_product form — every float op has an identical twin, so rows,
     cells, and hashes all agree.
@@ -1891,11 +1888,14 @@ def _q26_sql() -> str:
     _q26_sql(),
     doc="IVF (k-means coarse quantizer) approximate cosine top-k on the "
         "served-index path: centroids trained once (tools/train_ivf.py), "
-        "embedded as literals in both engines, assignment + probing + "
-        "scoring all bit-reproducible (sequential folds) — full oracle. "
-        "The trained path (kmeans_centroids + pandas-UDF assignment) is "
-        "pytest-verified (test_ivf_topk_matches_exact_on_clusters, "
-        "test_ivf_served_fold_matches_pandas_assign).",
+        "embedded as literals in both engines (full oracle). sim.ivf_topk "
+        "has one path — vectorized first-argmax cell assignment, "
+        "fold-ranked probes, vectorized cosine — that reproduces the "
+        "oracle's sequential folds bit for bit. The trained path "
+        "(kmeans_centroids) is "
+        "pytest-verified (test_ivf_topk_matches_exact_on_clusters) and the "
+        "kernels against the interpreted fold references "
+        "(test_ivf_served_fold_matches_pandas_assign).",
 )
 def q26(spark, sf_dir):
     from .ivf_snapshot import IVF_CENTROIDS_SF001
@@ -1903,12 +1903,8 @@ def q26(spark, sf_dir):
 
     e = _t(spark, sf_dir, "embeddings")
     q = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
-    # r6: assign="exact" — the vectorized bit-identical kernels (same
-    # sequential folds, same first-argmax) instead of the interpreted
-    # CASE-chain + per-row fold scoring; the oracle SQL still mirrors the
-    # "fold" expression form, which these kernels reproduce bit-for-bit
     out = ivf_topk(e, q, k=_IVF_K, nprobe=_IVF_NPROBE,
-                   centroids=IVF_CENTROIDS_SF001, assign="exact")
+                   centroids=IVF_CENTROIDS_SF001)
     return out.select("vec_id", "cell",
                       F.round("cosine", 9).cast("double").alias("cosine"))
 
@@ -2618,9 +2614,10 @@ def _q68_sql() -> str:
     "q68_semdedup",
     _q68_sql(),
     doc="SemDeDup (Abbas et al. 2023) semantic dedup: k-means cluster "
-        "assignment (the q26 served-centroid fold — literal centroids, "
-        "bit-reproducible CASE argmax) + within-cluster cosine pruning via "
-        "the q16/q32-proven blocked self-join; a vector is dropped iff a "
+        "assignment (the q26 served centroids and cell kernel — literal "
+        "centroids, bit-identical to the oracle's CASE argmax) + "
+        "within-cluster cosine pruning via the q16/q32 blocked pair "
+        "kernel; a vector is dropped iff a "
         "smaller-id cluster-mate sits above tau (min-id dominance — no "
         "transitive closure needed). Candidate cost is cluster "
         "co-occupancy, never corpus²; at 10^12 scale the cluster id is the "
@@ -3420,3 +3417,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     return {name: spec.sql for name, spec in _REGISTRY.items() if spec.sql is not None}
+
+
+# the landed-parquet entries (extraction, streaming, media, curation) join
+# this registry; imported last so their oracles can reuse the SQL helpers
+from . import landed_queries  # noqa: E402,F401

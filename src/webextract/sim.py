@@ -2,10 +2,13 @@
 
 Implementations over an ``array<float>`` embedding column. Float semantics
 are pinned to the sequential left fold everywhere (Spark
-``aggregate``/``zip_with`` ≡ DuckDB ``list_dot_product``); since r6 the hot
-paths compute that fold VECTORIZED in Arrow batches (``np.cumsum`` is
-bit-identical to the fold — see the kernel notes below), while the all-JVM
-expression forms remain for the oracle-SQL derivations:
+``aggregate``/``zip_with`` ≡ DuckDB ``list_dot_product``, the form every
+oracle SQL uses). Each operator has ONE implementation: the hot paths
+compute that fold VECTORIZED in Arrow batches (``np.cumsum`` is
+bit-identical to the fold — see the kernel notes below), including its
+SQL edge semantics (NULL/ragged vectors, NULL elements, zero norms). The
+interpreted fold forms those kernels are checked against live with the
+tests, not here.
 
 - :func:`cosine_topk`      — exact top-k vs a query vector (the baseline);
   sequential-fold dot products (``aggregate``/``zip_with``) so results are
@@ -19,6 +22,8 @@ expression forms remain for the oracle-SQL derivations:
   to LSH — fewer empty probes when the corpus is clustered.
 - :func:`pairwise_near`    — all pairs above a cosine threshold with
   blocking (label or LSH bucket) to stay sub-quadratic.
+- :func:`semdedup`         — k-means clustering + within-cluster
+  :func:`pairwise_near` pruning.
 
 The random hyperplanes are seeded deterministically (xxhash64 of
 (plane, dim)) → reproducible bucketing with no stored model artifact.
@@ -28,9 +33,20 @@ fixed Lloyd iteration count), so cell assignments are reproducible.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+
+
+def _doubles(values) -> pd.Series:
+    """float64 column for Arrow: None → NULL, NaN stays NaN. (A plain pandas
+    float/object column goes through ``isnull()``, which turns every NaN
+    into NULL — where the SQL fold returns NaN.)"""
+    return pd.Series(pd.arrays.ArrowExtensionArray(
+        pa.array(values, type=pa.float64())))
 
 
 def _dot(a: str, b: str):
@@ -46,6 +62,30 @@ def _norm(a: str):
 
 def _lit_vec(vec: list[float]):
     return F.array(*[F.lit(float(x)).cast("double") for x in vec])
+
+
+def _null_if_any_null(vec_col: str):
+    """The vector, or NULL when any element is NULL. Arrow hands a NULL
+    element to numpy as NaN, while the SQL fold turns it into a NULL dot;
+    routing such rows to the NULL-vector path keeps the kernels on the SQL
+    semantics (a genuine NaN element still reaches them as NaN)."""
+    c = F.col(vec_col)
+    return F.when(F.exists(c, lambda x: x.isNull()), F.lit(None)).otherwise(c)
+
+
+def l2_normalize(centroids: list[list[float]]) -> list[list[float]]:
+    """L2-normalize centroids with a pure-python sequential fold, so the
+    doubles are engine-neutral (the :mod:`webextract.ivf_snapshot` form).
+    Argmax of dot equals argmax of cosine only at constant ``|c_i|``, so
+    every trained centroid set goes through here before cell assignment."""
+    out = []
+    for c in centroids:
+        s = 0.0
+        for x in c:
+            s += float(x) * float(x)
+        n = math.sqrt(s) or 1.0
+        out.append([float(x) / n for x in c])
+    return out
 
 
 def cosine_topk(df: DataFrame, query_vec: list[float], *, k: int = 10,
@@ -67,23 +107,6 @@ def _hyperplane(plane: int, dim: int, seed: int = 7) -> list[float]:
 
     r = random.Random(f"{seed}|{plane}")
     return [r.gauss(0.0, 1.0) for _ in range(dim)]
-
-
-def lsh_bucket_col(vec_col: str, dim: int, n_planes: int = 8, seed: int = 7):
-    """Sign-of-projection bit code: bucket = Σ (dot(v, p_i) > 0) << i."""
-    code = None
-    for p in range(n_planes):
-        plane = _hyperplane(p, dim, seed)
-        proj = F.expr(
-            "aggregate(zip_with({v}, array({plane}), (x, y) -> CAST(x AS DOUBLE) * y), "
-            "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)".format(
-                v=vec_col, plane=", ".join(f"CAST({x!r} AS DOUBLE)" for x in plane)
-            )
-        )
-        bit = F.when(proj > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, p)
-        code = term if code is None else code.bitwiseXOR(term)
-    return code
 
 
 def ann_topk(df: DataFrame, query_vec: list[float], *, k: int = 10,
@@ -119,74 +142,17 @@ def ann_topk(df: DataFrame, query_vec: list[float], *, k: int = 10,
     )
 
 
-def ivf_cell_col(centroids: list[list[float]], vec_col: str = "embedding"):
-    """Column assigning each vector to its max-cosine centroid (its IVF cell).
-
-    Vectorized: one numpy matmul per Arrow batch inside a pandas UDF; the
-    C×dim centroid matrix ships once per executor in the UDF closure.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    cm = np.asarray(centroids, dtype=np.float64)
-    cm = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-
-    @pandas_udf("int")
-    def _assign(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        m = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(m @ cm.T, axis=1).astype("int32"))
-
-    return _assign(F.col(vec_col))
-
-
-def _dot_lit(vec_col: str, vals: list[float]):
-    """Sequential-fold dot product against a literal vector — the same fold
-    as :func:`_dot`, so it is bit-equal to DuckDB ``list_dot_product`` on the
-    same doubles (the q15/q19-proven parity trick)."""
-    arr = ", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in vals)
-    return F.expr(
-        f"aggregate(zip_with({vec_col}, array({arr}), "
-        f"(x, y) -> CAST(x AS DOUBLE) * y), "
-        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-
-
-def ivf_assign_expr(centroids: list[list[float]], vec_col: str = "embedding"):
-    """All-JVM IVF cell assignment: ``argmax_i dot(v, c_i)`` via sequential
-    folds + a first-max CASE chain (ties → lowest cell index, matching
-    ``np.argmax``).
-
-    The oracle-checkable twin of :func:`ivf_cell_col`: every float op has an
-    identical DuckDB form, so cell ids are bit-reproducible across engines —
-    no pandas/numpy in the plan at all. Expects **L2-normalized** centroids
-    (argmax of dot equals argmax of cosine only at constant ``|c_i|``);
-    :mod:`webextract.ivf_snapshot` stores them normalized.
-    """
-    d = [_dot_lit(vec_col, c) for c in centroids]
-    chain = None
-    for i in range(len(d) - 1):
-        rest = d[i + 1:]
-        best_rest = rest[0] if len(rest) == 1 else F.greatest(*rest)
-        cond = d[i] >= best_rest
-        chain = F.when(cond, i) if chain is None else chain.when(cond, i)
-    if chain is None:  # single centroid
-        return F.lit(0).cast("int")
-    return chain.otherwise(len(d) - 1).cast("int")
-
-
 def ivf_assign_pandas_exact(centroids: list[list[float]],
                             vec_col: str = "embedding"):
-    """Vectorized twin of :func:`ivf_assign_expr` — bit-identical cell ids.
+    """IVF cell assignment, ``argmax_i dot(v, c_i)`` — the cell ids of the
+    oracle's first-max CASE chain over sequential-fold dots, bit for bit.
 
     Per row: the C dot products are sequential left-folds (cumsum — the same
     accumulation order as the SQL fold and DuckDB), and the winner is the
     FIRST argmax (``np.argmax``), exactly the CASE chain's
     ``d[i] >= greatest(d[i+1:])`` pick. One numpy pass per Arrow batch
-    replaces the O(C²·dim) interpreted expression tree per row (the CASE
-    chain re-evaluates every later dot at each level). Expects the same
-    L2-normalized centroids as :func:`ivf_assign_expr`.
+    instead of the O(C²·dim) interpreted expression tree per row. Expects
+    **L2-normalized** centroids (:func:`l2_normalize`).
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -198,8 +164,8 @@ def ivf_assign_pandas_exact(centroids: list[list[float]],
         if len(v) == 0:
             return pd.Series([], dtype="int32")
         arrs = v.to_numpy()
-        # NULL / wrong-length vectors: every fold is NULL, every CASE cond
-        # is NULL, the chain falls through to otherwise(C-1)
+        # NULL / NULL-element / wrong-length vectors: every fold is NULL,
+        # every CASE cond is NULL, the chain falls through to otherwise(C-1)
         out = np.full(len(arrs), cm.shape[0] - 1, dtype=np.int32)
         ok = np.fromiter(
             (w is not None and len(w) == cm.shape[1] for w in arrs),
@@ -217,15 +183,15 @@ def ivf_assign_pandas_exact(centroids: list[list[float]],
             out[ok] = cells
         return pd.Series(out)
 
-    return _assign(F.col(vec_col))
+    return _assign(_null_if_any_null(vec_col))
 
 
 def cosine_vs_query_exact(query_vec: list[float], vec_col: str = "embedding"):
-    """Vectorized twin of ``_dot(v, qv)/(_norm(v)*_norm(qv))`` against a
-    literal query — bit-identical doubles (sequential folds via cumsum),
-    including the SQL edge semantics: NULL for NULL/ragged vectors (the
-    zip_with NULL tail) and for a zero denominator (Spark x/0 → NULL);
-    NaN data propagates as NaN."""
+    """Vectorized ``_dot(v, qv)/(_norm(v)*_norm(qv))`` against a literal
+    query — bit-identical doubles (sequential folds via cumsum), including
+    the SQL edge semantics: NULL for NULL/ragged vectors (the zip_with NULL
+    tail), for vectors with a NULL element (NULL fold) and for a zero
+    denominator (Spark x/0 → NULL); NaN data yields a NaN cosine."""
     from pyspark.sql.functions import pandas_udf
 
     q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
@@ -252,9 +218,9 @@ def cosine_vs_query_exact(query_vec: list[float], vec_col: str = "embedding"):
             for j, i in enumerate(idxs):
                 d = denom[j]
                 out[i] = None if d == 0 else float(dots[j] / d)
-        return pd.Series(out, dtype=object)
+        return _doubles(out)
 
-    return _cos(F.col(vec_col))
+    return _cos(_null_if_any_null(vec_col))
 
 
 def kmeans_centroids(df: DataFrame, *, n_centroids: int = 8, n_iter: int = 3,
@@ -265,7 +231,8 @@ def kmeans_centroids(df: DataFrame, *, n_centroids: int = 8, n_iter: int = 3,
     Init: the ``n_centroids`` rows with the smallest ``xxhash64(id, seed)``
     — a deterministic pseudo-random sample taken with one top-k scan (never
     a corpus collect). Each Lloyd iteration is two distributed passes:
-    vectorized assignment (:func:`ivf_cell_col`) and an element-wise mean
+    vectorized assignment (:func:`ivf_assign_pandas_exact` over the
+    L2-normalized current centroids) and an element-wise mean
     via ``posexplode`` + ``groupBy(cell, pos)`` — the shuffle output is
     C×dim rows regardless of corpus size, so iterations cost one scan each
     at any scale. Empty cells keep their previous centroid.
@@ -278,7 +245,7 @@ def kmeans_centroids(df: DataFrame, *, n_centroids: int = 8, n_iter: int = 3,
     cents = [[float(x) for x in r.v] for r in init]
     for _ in range(n_iter):
         assigned = df.select(
-            ivf_cell_col(cents, vec_col).alias("cell"),
+            ivf_assign_pandas_exact(l2_normalize(cents), vec_col).alias("cell"),
             F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("v"),
         )
         means = (
@@ -296,63 +263,36 @@ def kmeans_centroids(df: DataFrame, *, n_centroids: int = 8, n_iter: int = 3,
 def ivf_topk(df: DataFrame, query_vec: list[float], *, k: int = 10,
              n_centroids: int = 8, nprobe: int = 2, n_iter: int = 3,
              vec_col: str = "embedding", id_col: str = "vec_id", seed: int = 7,
-             centroids: list[list[float]] | None = None,
-             assign: str = "pandas") -> DataFrame:
-    """IVF approximate top-k: probe the ``nprobe`` max-cosine cells only.
+             centroids: list[list[float]] | None = None) -> DataFrame:
+    """IVF approximate top-k: probe the ``nprobe`` max-dot cells only.
 
     At 10^12 scale the cell column is computed once at ingest and the table
     is partitioned by it, so the probe filter below becomes partition
     pruning and a query scans ~``nprobe / n_centroids`` of the corpus.
-    Pass precomputed ``centroids`` to skip training (the served-index path).
+    Pass precomputed L2-normalized ``centroids`` (the
+    :mod:`webextract.ivf_snapshot` form) to skip training (the served-index
+    path); trained centroids go through :func:`l2_normalize`.
 
-    ``assign`` picks the cell-assignment implementation:
-
-    - ``"pandas"`` (default) — :func:`ivf_cell_col`, one numpy matmul per
-      Arrow batch; the production path (C×dim ships once per executor).
-    - ``"fold"``  — :func:`ivf_assign_expr`, sequential-fold dots + CASE
-      argmax, all-JVM and bit-reproducible against the DuckDB oracle; probe
-      ranking is computed with the same pure-python fold. Requires
-      L2-normalized ``centroids`` (the :mod:`webextract.ivf_snapshot` form).
+    Cells come from :func:`ivf_assign_pandas_exact`, probes are ranked by
+    the sequential-fold ``dot(centroid, query)`` (ties → lower cell), and
+    scores from :func:`cosine_vs_query_exact`: every float op is the fold
+    the q26 oracle SQL uses, so rows, cells and cosines are bit-identical.
     """
     if centroids is None:
-        centroids = kmeans_centroids(df, n_centroids=n_centroids, n_iter=n_iter,
-                                     vec_col=vec_col, id_col=id_col, seed=seed)
-    if assign in ("fold", "exact"):
-        qv = [float(x) for x in query_vec]
-        dots = []
-        for i, c in enumerate(centroids):
-            s = 0.0
-            for x, y in zip(c, qv):  # sequential fold ≡ the engine/oracle fold
-                s += float(x) * y
-            dots.append((s, i))
-        probes = [i for _, i in sorted(dots, key=lambda t: (-t[0], t[1]))[:nprobe]]
-        # "exact" (r6): the vectorized kernels — bit-identical cells and
-        # cosines (sequential folds via cumsum), one Arrow pass instead of
-        # the O(C²·dim) interpreted CASE chain + per-row fold expressions;
-        # "fold" keeps the all-JVM expression plan the oracle SQL mirrors.
-        cell = (ivf_assign_pandas_exact(centroids, vec_col)
-                if assign == "exact" else ivf_assign_expr(centroids, vec_col))
-        if assign == "exact":
-            cand = df.withColumn("cell", cell).filter(F.col("cell").isin(probes))
-            scored = cand.withColumn(
-                "cosine", cosine_vs_query_exact(query_vec, vec_col))
-            return (
-                scored.select(id_col, "cell", "cosine")
-                .orderBy(F.col("cosine").desc(), F.col(id_col))
-                .limit(k)
-            )
-    else:
-        cm = np.asarray(centroids, dtype=np.float64)
-        cm = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-        q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-        q = q / max(float(np.linalg.norm(q)), 1e-12)
-        probes = [int(i) for i in np.argsort(-(cm @ q), kind="stable")[:nprobe]]
-        cell = ivf_cell_col(centroids, vec_col)
-
-    cand = df.withColumn("cell", cell).filter(F.col("cell").isin(probes))
-    scored = cand.withColumn("qv", _lit_vec(query_vec)).withColumn(
-        "cosine", _dot(vec_col, "qv") / (_norm(vec_col) * _norm("qv"))
-    )
+        centroids = l2_normalize(kmeans_centroids(
+            df, n_centroids=n_centroids, n_iter=n_iter, vec_col=vec_col,
+            id_col=id_col, seed=seed))
+    qv = [float(x) for x in query_vec]
+    dots = []
+    for i, c in enumerate(centroids):
+        s = 0.0
+        for x, y in zip(c, qv):  # sequential fold ≡ the engine/oracle fold
+            s += float(x) * y
+        dots.append((s, i))
+    probes = [i for _, i in sorted(dots, key=lambda t: (-t[0], t[1]))[:nprobe]]
+    cand = (df.withColumn("cell", ivf_assign_pandas_exact(centroids, vec_col))
+            .filter(F.col("cell").isin(probes)))
+    scored = cand.withColumn("cosine", cosine_vs_query_exact(query_vec, vec_col))
     return (
         scored.select(id_col, "cell", "cosine")
         .orderBy(F.col("cosine").desc(), F.col(id_col))
@@ -378,11 +318,12 @@ def ivf_topk(df: DataFrame, query_vec: list[float], *, k: int = 10,
 #      DuckDB ``list_dot_product``) for candidate pairs only.
 #
 # Result rows are therefore bit-identical to the join+fold plan, including
-# the edge semantics: rows with NULL vectors never pair (their SQL cosine is
-# NULL), pairs of different-length vectors never pair (zip_with's NULL tail
-# nulls the fold), a zero-norm side yields NULL (Spark x/0 → NULL) and never
-# pairs, and a NaN cosine from NaN data PASSES the >= tau filter (Spark/
-# DuckDB order NaN above every value).
+# the edge semantics: rows with NULL vectors or NULL elements never pair
+# (their SQL cosine is NULL), pairs of different-length vectors never pair
+# (zip_with's NULL tail nulls the fold), a zero-norm side yields NULL (Spark
+# x/0 → NULL) and never pairs, a duplicated id never pairs with itself (SQL's
+# id_a < id_b), and a NaN cosine from NaN data PASSES the >= tau filter
+# (Spark/DuckDB order NaN above every value).
 # ---------------------------------------------------------------------------
 
 _PAIR_PREFILTER_MARGIN = 1e-6
@@ -427,7 +368,7 @@ def _block_pair_arrays(ids, E, tau: float):
             cos[nz] = dots[nz] / dn[nz]
             # NaN cosine (NaN data, inf/inf) passes: Spark/DuckDB order NaN
             # above every value; zero-denom rows are already out (SQL NULL)
-            keep = nz & ((cos >= tau) | np.isnan(cos))
+            keep = nz & ((cos >= tau) | np.isnan(cos)) & (ids[ii] != ids[jj])
             if keep.any():
                 out_i.append(ids[ii[keep]])
                 out_j.append(ids[jj[keep]])
@@ -473,16 +414,20 @@ def _near_pairs_grouped(v: DataFrame, tau: float, id_type: str) -> DataFrame:
                     {"id_a": got[0], "id_b": got[1], "cosine": got[2]}))
         if not frames:
             return empty
-        return pd.concat(frames, ignore_index=True)
+        out = pd.concat(frames, ignore_index=True)
+        out["cosine"] = _doubles(out["cosine"].to_numpy())
+        return out
 
     schema = f"id_a {id_type}, id_b {id_type}, cosine double"
     return v.groupBy("blk").applyInPandas(fn, schema)
 
 
 def lsh_bucket_pandas(dim: int, n_planes: int = 6, seed: int = 7):
-    """Vectorized twin of :func:`lsh_bucket_col`: projections computed with
-    the exact sequential fold (cumsum), so the sign bits — and therefore the
-    bucket ids — are bit-identical to the SQL fold and the DuckDB oracle."""
+    """Random-hyperplane bucket code ``Σ (dot(v, p_i) > 0) << i``:
+    projections computed with the exact sequential fold (cumsum), so the
+    sign bits — and therefore the bucket ids — are bit-identical to the SQL
+    fold and the DuckDB oracle. A NULL element makes every SQL projection
+    NULL (bit 0), exactly like its NaN here."""
     planes = np.stack([np.asarray(_hyperplane(p, dim, seed), dtype=np.float64)
                        for p in range(n_planes)])
 
@@ -518,7 +463,8 @@ def pairwise_near(df: DataFrame, *, tau: float, vec_col: str = "embedding",
     """All pairs with cosine >= tau, computed within blocks only.
 
     ``block_col=None`` → LSH-bucket blocking (approximate recall, linear-ish
-    cost); a user block column (e.g. label, domain) → exact within blocks.
+    cost) over ``dim``-long vectors, ``dim`` required; a user block column
+    (e.g. label, domain) → exact within blocks.
 
     Implementation: one ``applyInPandas`` per block — BLAS prefilter + exact
     sequential-fold recompute (see the kernel note above) — replacing the
@@ -528,7 +474,8 @@ def pairwise_near(df: DataFrame, *, tau: float, vec_col: str = "embedding",
     """
     if block_col is None:
         if dim is None:
-            dim = len(df.select(vec_col).first()[0])
+            raise ValueError("pairwise_near: LSH blocking (block_col=None) "
+                             "needs the vector length dim")
         df = df.withColumn(
             "_blk", lsh_bucket_pandas(dim, n_planes, seed)(F.col(vec_col)))
         block = "_blk"
@@ -537,17 +484,22 @@ def pairwise_near(df: DataFrame, *, tau: float, vec_col: str = "embedding",
     id_type = dict(df.dtypes)[id_col]
     v = df.select(
         F.col(id_col).alias("id"), F.col(block).alias("blk"),
-        F.col(vec_col).alias("emb"),
+        _null_if_any_null(vec_col).alias("emb"),
     ).filter(F.col("blk").isNotNull())
     return _near_pairs_grouped(v, tau, id_type).distinct()
+
+
+# Hash-Min round budget for semdedup's component mode: within-cluster
+# near-dup graphs are quasi-cliques (2-3 rounds); a deeper similarity chain
+# falls back to star contraction
+_SEMDEDUP_CC_ROUNDS = 25
 
 
 def semdedup(df: DataFrame, *, tau: float,
              centroids: list[list[float]] | None = None,
              n_centroids: int = 8, n_iter: int = 2,
              vec_col: str = "embedding", id_col: str = "vec_id",
-             seed: int = 7, mode: str = "minid",
-             cc: str = "auto", cc_max_iter: int = 25) -> DataFrame:
+             seed: int = 7, mode: str = "minid") -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup by k-means cluster +
     within-cluster cosine pruning.
 
@@ -572,23 +524,24 @@ def semdedup(df: DataFrame, *, tau: float,
       representative. Ids must be INTEGRAL (the CC label arithmetic casts
       to long) — non-integral id columns raise ``TypeError``; key string
       ids by ``xxhash64`` upstream (``"minid"`` accepts any orderable id).
-      CC strategy is picked by ``cc``: ``"auto"`` (default) runs Hash-Min
-      with a ``cc_max_iter`` diameter budget — within-cluster near-dup
-      graphs are quasi-cliques, 2-3 rounds — and on a budget blowout
-      (a drifting-template similarity CHAIN deeper than the budget) falls
-      back to :func:`webextract.dedup.connected_components_star`
-      (O(log^2 n) rounds on any topology); ``"hashmin"`` / ``"star"``
-      force one strategy (hashmin then raises instead of falling back).
+      Components come from Hash-Min with a fixed 25-round diameter budget
+      — within-cluster near-dup graphs are quasi-cliques, 2-3 rounds — and
+      on a budget blowout (a drifting-template similarity CHAIN deeper
+      than the budget) from
+      :func:`webextract.dedup.connected_components_star` (O(log^2 n)
+      rounds on any topology). Each wins on one graph shape, and both
+      return the same (id, cluster_id = component min).
       Neither keep rule subsumes the other: on edges (1,3),(2,3) minid
       keeps {1,2} while component keeps {1} (2 and 3 share the group
       through 3).
 
-    Scale shape: cluster assignment is the IVF fold (all-JVM, bit
-    reproducible with literal ``centroids``; trains a deterministic k-means
-    when none are given); the pairwise stage is :func:`pairwise_near`'s
-    blocked self-join ON THE CLUSTER KEY, so candidate cost is bounded by
-    cluster co-occupancy, never corpus². At 10^12 scale the cluster id is
-    the partition key and each cluster prunes independently — SemDeDup's
+    Scale shape: cluster assignment is :func:`ivf_assign_pandas_exact`
+    (bit-reproducible against the oracle's fold with literal ``centroids``;
+    trains a deterministic k-means when none are given); the pairwise stage
+    is :func:`pairwise_near` blocked ON THE CLUSTER KEY, so candidate cost
+    is bounded by cluster co-occupancy, never corpus². At 10^12 scale the
+    cluster id is the partition key and each cluster prunes independently
+    — SemDeDup's
     published design point (clusters sized to fit one worker). The k-means
     centroid count grows as sqrt(corpus) to keep clusters bounded; the
     dominance rule keeps the min id of each pairwise-above-``tau``
@@ -596,24 +549,9 @@ def semdedup(df: DataFrame, *, tau: float,
     best copy, as pipeline.curate does for text near-dup).
     """
     if centroids is None:
-        raw = kmeans_centroids(df, n_centroids=n_centroids,
-                               n_iter=n_iter, vec_col=vec_col,
-                               id_col=id_col, seed=seed)
-        # ivf_assign_expr requires L2-NORMALIZED centroids (argmax of dot
-        # equals argmax of cosine only at constant |c_i|); kmeans_centroids
-        # returns raw element-wise means, so normalize here — with the same
-        # sequential fold the snapshot uses, keeping assignment
-        # deterministic and engine-neutral
-        centroids = []
-        for c in raw:
-            s = 0.0
-            for x in c:
-                s += float(x) * float(x)
-            n = (s ** 0.5) or 1.0
-            centroids.append([float(x) / n for x in c])
-    # bit-identical vectorized assignment (one numpy pass per Arrow batch)
-    # instead of the O(C²·dim)-per-row interpreted CASE chain; the fold twin
-    # ivf_assign_expr stays available for the oracle-SQL derivation
+        centroids = l2_normalize(kmeans_centroids(
+            df, n_centroids=n_centroids, n_iter=n_iter, vec_col=vec_col,
+            id_col=id_col, seed=seed))
     assigned = df.select(
         F.col(id_col), F.col(vec_col),
         ivf_assign_pandas_exact(centroids, vec_col).alias("cluster"),
@@ -632,23 +570,13 @@ def semdedup(df: DataFrame, *, tau: float,
                 f"type {dt}; connected-components label arithmetic needs "
                 "an integral id — key string ids by xxhash64 upstream "
                 "(mode='minid' accepts any orderable id type)")
-        if cc == "star":
+        try:
+            comp = connected_components(pairs, src="id_a", dst="id_b",
+                                        max_iter=_SEMDEDUP_CC_ROUNDS)
+        except RuntimeError:
+            # diameter blowout (similarity chain): rerun with the
+            # long-chain-safe contraction
             comp = connected_components_star(pairs, src="id_a", dst="id_b")
-        elif cc in ("auto", "hashmin"):
-            try:
-                comp = connected_components(pairs, src="id_a", dst="id_b",
-                                            max_iter=cc_max_iter)
-            except RuntimeError:
-                if cc != "auto":
-                    raise
-                # diameter blowout (similarity chain): rerun with the
-                # long-chain-safe contraction; same (id, cluster_id =
-                # component min) contract
-                comp = connected_components_star(pairs, src="id_a",
-                                                 dst="id_b")
-        else:
-            raise ValueError(f"semdedup: unknown cc {cc!r} "
-                             "(expected 'auto', 'hashmin', or 'star')")
         # group min survives: cluster_id IS the component min
         dropped = (comp.filter(F.col("id") != F.col("cluster_id"))
                    .select(F.col("id").alias(id_col)))

@@ -74,11 +74,6 @@ def make_extract_batches(link_density_max: float = 0.5,
     return extract_batches
 
 
-def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Default-threshold mapInPandas body (see make_extract_batches)."""
-    return _extract_batches(batches, 0.5, 25)
-
-
 def _extract_batches(batches: Iterator[pd.DataFrame], link_density_max: float,
                      min_chars_linked: int) -> Iterator[pd.DataFrame]:
     """Vectorized over Arrow batches, per-document loop inside the batch.

@@ -118,3 +118,36 @@ def test_cli_prep_end_to_end(spark, tmp_path, capsys):
     assert set(packed.columns) == {"doc_id", "source", "tokens", "shard",
                                    "offset", "first_chunk", "last_chunk",
                                    "n_chunks"}
+
+
+@pytest.mark.parametrize("cmd,recipe", [("curate", "curate"),
+                                        ("prep", "pretrain_prep")])
+def test_cli_failed_write_leaves_nothing_cached(spark, tmp_path, monkeypatch,
+                                                cmd, recipe):
+    """The recipes return a persisted frame; a write that fails must still
+    unpersist it."""
+    from pyspark import StorageLevel
+
+    from webextract import pipeline
+    from webextract.cli import main
+
+    returned = []
+
+    def persisted_recipe(*a, **kw):
+        out = spark.range(5).persist()
+        out.count()
+        returned.append(out)
+        return out, {"input": 5}
+
+    monkeypatch.setattr(pipeline, recipe, persisted_recipe)
+    src = str(tmp_path / "in")
+    spark.range(1).write.parquet(src)
+    blocker = tmp_path / "a_file"
+    blocker.write_text("not a directory")
+    argv = [cmd, "--input", src, "--output", str(blocker / "out")]
+    if cmd == "prep":
+        argv += ["--bench", src]
+    with pytest.raises(Exception):
+        main(argv)
+    assert len(returned) == 1
+    assert returned[0].storageLevel == StorageLevel.NONE

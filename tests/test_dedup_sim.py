@@ -19,6 +19,14 @@ from webextract.sim import (
     pairwise_near,
 )
 
+from fold_reference import (
+    cosine_vs_query_fold,
+    ivf_assign_expr,
+    ivf_topk_fold,
+    lsh_bucket_col,
+    pairwise_near_fold,
+)
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -274,32 +282,32 @@ def test_minhash_twin_hash_paths_equal_candidates(docs, n):
 
 
 def test_ivf_served_fold_matches_pandas_assign(spark):
-    """The all-JVM fold assignment (q26's oracle-checkable path) and the
-    numpy pandas-UDF assignment (the production path) agree on cells and
-    results for the served snapshot centroids."""
+    """The all-JVM fold plan (what q26's oracle SQL mirrors) and ivf_topk's
+    vectorized kernels return the identical rows — ids, cells and unrounded
+    cosines — for the served snapshot centroids."""
     from webextract.ivf_snapshot import IVF_CENTROIDS_SF001
 
     e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = [float(x) for x in e.filter("vec_id = 0").first().embedding]
     kw = dict(k=20, nprobe=3, centroids=IVF_CENTROIDS_SF001)
-    fold = [(r.vec_id, r.cell, round(r.cosine, 9)) for r in
-            ivf_topk(e, q, assign="fold", **kw).collect()]
-    pnd = [(r.vec_id, r.cell, round(r.cosine, 9)) for r in
-           ivf_topk(e, q, assign="pandas", **kw).collect()]
-    assert fold == pnd
+    fold = [tuple(r) for r in ivf_topk_fold(e, q, **kw).collect()]
+    got = [tuple(r) for r in ivf_topk(e, q, **kw).collect()]
+    assert fold == got
     assert len(fold) == 20
     assert len({c for _, c, _ in fold}) <= 3  # probed cells only
 
 
 def test_ivf_assign_expr_first_max_tiebreak(spark):
     """Equal-score cells resolve to the LOWEST index (np.argmax semantics)
-    in the fold path — the CASE chain's arm order is load-bearing for
-    oracle parity."""
-    from webextract.sim import ivf_assign_expr
+    in the fold reference and the kernel — the CASE chain's arm order is
+    load-bearing for oracle parity."""
+    from webextract.sim import ivf_assign_pandas_exact
 
     df = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id int, embedding array<double>")
     cents = [[1.0, 0.0], [1.0, 0.0], [0.0, 1.0]]  # 0 and 1 tie exactly
-    assert df.withColumn("cell", ivf_assign_expr(cents)).first().cell == 0
+    got = df.select(ivf_assign_expr(cents).alias("a"),
+                    ivf_assign_pandas_exact(cents).alias("b")).first()
+    assert (got.a, got.b) == (0, 0)
 
 
 def test_dedup_against_index(docs, spark):
@@ -477,27 +485,9 @@ def test_cc_converges_when_diameter_equals_max_iter(spark):
 # ---------------------------------------------------------------------------
 
 
-def _pairwise_near_sql_reference(df, *, tau, block_col, id_col="vec_id",
-                                 vec_col="embedding"):
-    """The r5 implementation (self-join on the block key + interpreted
-    aggregate/zip_with fold), kept verbatim as the equivalence reference."""
-    from webextract.sim import _dot, _norm
-
-    v = df.select(
-        F.col(id_col).alias("id"), F.col(block_col).alias("blk"),
-        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("e"),
-    ).withColumn("nrm", _norm("e"))
-    a = v.select(F.col("id").alias("id_a"), F.col("blk"),
-                 F.col("e").alias("ea"), F.col("nrm").alias("na"))
-    b = v.select(F.col("id").alias("id_b"), F.col("blk"),
-                 F.col("e").alias("eb"), F.col("nrm").alias("nb"))
-    cos = _dot("ea", "eb") / (F.col("na") * F.col("nb"))
-    return (
-        a.join(b, "blk").filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", cos.alias("cosine"))
-        .filter(F.col("cosine") >= tau)
-        .distinct()
-    )
+def _nan_as_str(rows):
+    """Row tuples with NaN replaced by 'nan', so NaN results compare equal."""
+    return {tuple("nan" if x != x else x for x in r) for r in rows}
 
 
 def test_pairwise_near_kernel_bit_identical_to_sql_join(spark):
@@ -513,7 +503,7 @@ def test_pairwise_near_kernel_bit_identical_to_sql_join(spark):
                for x in pairwise_near(df, tau=tau,
                                       block_col="label").collect()}
         ref = {(x.id_a, x.id_b, x.cosine)
-               for x in _pairwise_near_sql_reference(
+               for x in pairwise_near_fold(
                    df, tau=tau, block_col="label").collect()}
         assert new == ref and new  # exact doubles, non-empty
 
@@ -533,16 +523,18 @@ def test_pairwise_near_kernel_threshold_boundary_exact(spark):
     got = {(x.id_a, x.id_b)
            for x in pairwise_near(df, tau=tau, block_col="label").collect()}
     ref = {(x.id_a, x.id_b)
-           for x in _pairwise_near_sql_reference(
+           for x in pairwise_near_fold(
                df, tau=tau, block_col="label").collect()}
     assert (ia, ib) in got
     assert got == ref
 
 
 def test_pairwise_near_kernel_edge_rows_match_sql(spark):
-    """NULL vectors, empty arrays, ragged lengths, NULL block keys: the
-    kernel must reproduce the SQL join's edge semantics (none of these rows
-    ever emits a pair; same-length clean rows still do)."""
+    """NULL vectors, NULL elements, empty arrays, ragged lengths, NULL block
+    keys, duplicated ids, NaN data: the kernel must reproduce the SQL join's
+    edge semantics (a NULL element reaches numpy as NaN but is a NULL fold
+    in SQL: no pair; a duplicated id never pairs with itself; NaN data
+    pairs with a NaN cosine, which passes >= tau)."""
     rows = [
         (1, 0, [1.0, 2.0, 3.0]),
         (2, 0, [1.0, 2.0, 3.0]),     # pairs with 1
@@ -552,22 +544,25 @@ def test_pairwise_near_kernel_edge_rows_match_sql(spark):
         (6, 0, [1.0, 2.0]),          # ...but pairs with 5
         (7, None, [1.0, 2.0, 3.0]),  # NULL block never joins
         (8, 1, [0.5, 0.5, 0.5]),     # lone row in its block
+        (9, 0, [1.0, None, 3.0]),    # NULL element: NULL cosine, no pairs
+        (10, 0, [1.0, 2.0, 3.0]),    # duplicated id, two vectors: pairs
+        (10, 0, [1.0, 2.0, 3.05]),   # with 1 and 2, never with itself
+        (11, 0, [float("nan"), 2.0, 3.0]),  # NaN cosine with len-3 rows
     ]
     df = spark.createDataFrame(
         rows, "vec_id long, label int, embedding array<float>")
-    new = {(x.id_a, x.id_b, x.cosine)
-           for x in pairwise_near(df, tau=0.9, block_col="label").collect()}
-    ref = {(x.id_a, x.id_b, x.cosine)
-           for x in _pairwise_near_sql_reference(
-               df, tau=0.9, block_col="label").collect()}
+    new = _nan_as_str(pairwise_near(df, tau=0.9, block_col="label").collect())
+    ref = _nan_as_str(pairwise_near_fold(df, tau=0.9, block_col="label").collect())
     assert new == ref
-    assert {(a, b) for a, b, _ in new} == {(1, 2), (5, 6)}
+    assert {(a, b) for a, b, _ in new} == {
+        (1, 2), (5, 6), (1, 10), (2, 10), (1, 11), (2, 11), (10, 11)}
+    assert {c for a, b, c in new if 11 in (a, b)} == {"nan"}
 
 
 def test_ivf_assign_pandas_exact_matches_fold_expr(spark):
     """Vectorized IVF assignment == the CASE-chain fold expression on
     random data, exact ties (first-max), and NULL/ragged vectors."""
-    from webextract.sim import ivf_assign_expr, ivf_assign_pandas_exact
+    from webextract.sim import ivf_assign_pandas_exact
 
     r = random.Random("r6-assign")
     cents = [[r.gauss(0, 1) for _ in range(9)] for _ in range(6)]
@@ -577,22 +572,25 @@ def test_ivf_assign_pandas_exact_matches_fold_expr(spark):
     rows += [(900, cents[2][:]),          # exact centroid hit
              (901, None),                 # NULL vector → otherwise(C-1)
              (902, [1.0, 2.0]),           # ragged → otherwise(C-1)
-             (903, [0.0] * 9)]            # all-zero → all dots 0.0 → cell 0
+             (903, [0.0] * 9),            # all-zero → all dots 0.0 → cell 0
+             (904, [1.0, None] + [1.0] * 7)]  # NULL element → otherwise(C-1)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = df.select(
         "vec_id",
         ivf_assign_expr(cents).alias("a"),
         ivf_assign_pandas_exact(cents).alias("b")).collect()
     assert all(x.a == x.b for x in got)
-    assert {x.b for x in got if x.vec_id in (901, 902)} == {len(cents) - 1}
+    assert {x.b for x in got if x.vec_id in (901, 902, 904)} == {len(cents) - 1}
 
 
 def test_lsh_bucket_pandas_matches_sql_fold(spark):
-    from webextract.sim import lsh_bucket_col, lsh_bucket_pandas
+    from webextract.sim import lsh_bucket_pandas
 
     r = random.Random("r6-lsh")
     dim = 21
     rows = [(i, [r.gauss(0, 1) for _ in range(dim)]) for i in range(300)]
+    # a NULL element: every SQL projection is NULL (bit 0), its NaN too
+    rows.append((900, [1.0, None] + [1.0] * (dim - 2)))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = df.select(
         lsh_bucket_col("embedding", dim, 6, 7).alias("a"),
@@ -601,42 +599,46 @@ def test_lsh_bucket_pandas_matches_sql_fold(spark):
 
 
 def test_ivf_topk_exact_assign_matches_fold(spark):
-    """assign='exact' (vectorized kernels) must return the identical rows —
-    ids, cells, and unrounded cosine doubles — as assign='fold' (the
-    all-JVM expression plan the oracle SQL mirrors)."""
-    from webextract.sim import ivf_topk
-
+    """ivf_topk (vectorized kernels) must return the identical rows — ids,
+    cells, and unrounded cosine doubles — as the all-JVM fold plan the
+    oracle SQL mirrors."""
     r = random.Random("r6-ivf-exact")
     cents = [[r.gauss(0, 1) for _ in range(8)] for _ in range(5)]
     cents = [[x / (sum(y * y for y in c) ** 0.5) for x in c] for c in cents]
     rows = [(i, [r.gauss(0, 1) for _ in range(8)]) for i in range(300)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = rows[3][1]
-    a = ivf_topk(df, q, k=25, nprobe=2, centroids=cents,
-                 assign="fold").collect()
-    b = ivf_topk(df, q, k=25, nprobe=2, centroids=cents,
-                 assign="exact").collect()
+    a = ivf_topk_fold(df, q, k=25, nprobe=2, centroids=cents).collect()
+    b = ivf_topk(df, q, k=25, nprobe=2, centroids=cents).collect()
     assert [tuple(x) for x in a] == [tuple(x) for x in b]
 
 
 def test_cosine_vs_query_exact_matches_fold_expr(spark):
     from pyspark.sql import functions as F
 
-    from webextract.sim import _dot, _lit_vec, _norm, cosine_vs_query_exact
+    from webextract.sim import cosine_vs_query_exact
 
     r = random.Random("r6-cosq")
     rows = [(i, [r.gauss(0, 1) for _ in range(11)]) for i in range(200)]
-    rows += [(900, None), (901, []), (902, [1.0, 2.0])]  # NULL/zero/ragged
+    rows += [(900, None), (901, []), (902, [1.0, 2.0]),  # NULL/zero/ragged
+             (903, [1.0, None] + [1.0] * 9),           # NULL element → NULL
+             (904, [float("nan")] + [1.0] * 10)]       # NaN data → NaN
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = rows[0][1]
-    ref = (df.withColumn("qv", _lit_vec(q))
-           .withColumn("e", F.expr(
-               "transform(embedding, x -> CAST(x AS DOUBLE))"))
-           .select("vec_id",
-                   (_dot("e", "qv") / (_norm("e") * _norm("qv")))
-                   .alias("c")))
+    ref = cosine_vs_query_fold(
+        df.withColumn("e", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")),
+        q, "e").select("vec_id", F.col("cosine").alias("c"))
     got = df.select("vec_id", cosine_vs_query_exact(q).alias("c"))
-    a = {(x.vec_id, x.c) for x in ref.collect()}
-    b = {(x.vec_id, x.c) for x in got.collect()}
+    a = _nan_as_str(ref.collect())
+    b = _nan_as_str(got.collect())
     assert a == b
-    assert (900, None) in b and (901, None) in b and (902, None) in b
+    assert {(i, None) for i in (900, 901, 902, 903)} <= b and (904, "nan") in b
+
+
+def test_pairwise_near_lsh_blocking_requires_dim(spark):
+    df = spark.createDataFrame([(1, [1.0, 0.0]), (2, [1.0, 0.0])],
+                               "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="dim"):
+        pairwise_near(df, tau=0.5)
+    got = {(x.id_a, x.id_b) for x in pairwise_near(df, tau=0.5, dim=2).collect()}
+    assert got == {(1, 2)}

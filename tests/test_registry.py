@@ -40,3 +40,12 @@ def test_every_query_has_oracle_or_is_known_rows_only():
     osql = entry.oracle_sql()
     for n in entry.queries():
         assert n in osql, f"{n} silently lost its oracle"
+
+
+def test_adapter_exposes_the_one_package_registry():
+    """__spark_entry__ only orders and ships: its names and oracle SQL are
+    exactly the package registry's, so no second registry can grow there."""
+    from webextract import queries as q
+
+    assert set(entry.queries()) == set(q.queries())
+    assert entry.oracle_sql() == q.oracle_sql()

@@ -160,29 +160,33 @@ def test_semdedup_component_rejects_non_integral_ids(spark):
         semdedup(d, tau=0.9, centroids=cents, mode="component")
 
 
-def test_semdedup_component_auto_falls_back_to_star_on_chain(spark):
-    """cc='auto': a similarity chain deeper than the Hash-Min budget must
-    fall back to star contraction and still keep exactly the group min;
-    cc='hashmin' with the same budget raises instead (strict)."""
+def test_semdedup_component_auto_falls_back_to_star_on_chain(spark, monkeypatch):
+    """A similarity chain longer than the fixed Hash-Min round budget (25)
+    blows the budget; component mode must fall back to star contraction
+    and still keep exactly the group min."""
     import math
 
-    import pytest
+    from webextract import dedup
 
-    rows = [(i + 1, [math.cos(math.radians(40 * i)),
-                     math.sin(math.radians(40 * i))]) for i in range(3)]
+    # 32 unit vectors 3 degrees apart: only neighbours clear tau (4.5
+    # degrees), so the one component is a 31-edge chain rooted at id 1
+    n = 32
+    rows = [(i + 1, [math.cos(math.radians(3 * i)),
+                     math.sin(math.radians(3 * i))]) for i in range(n)]
     d = _vecs(spark, rows)
-    tau, cents = math.cos(math.radians(45)), [[1.0, 0.0]]
-    comp = semdedup(d, tau=tau, centroids=cents, mode="component",
-                    cc_max_iter=1).collect()
-    assert {r.vec_id: r.kept for r in comp} == {1: 1, 2: 0, 3: 0}
-    star = semdedup(d, tau=tau, centroids=cents, mode="component",
-                    cc="star").collect()
-    assert {r.vec_id: r.kept for r in star} == {1: 1, 2: 0, 3: 0}
-    with pytest.raises(RuntimeError, match="max_iter"):
-        semdedup(d, tau=tau, centroids=cents, mode="component",
-                 cc="hashmin", cc_max_iter=1).collect()
-    with pytest.raises(ValueError, match="cc"):
-        semdedup(d, tau=tau, centroids=cents, mode="component", cc="nope")
+    star_calls = []
+    star = dedup.connected_components_star
+
+    def counting_star(*a, **kw):
+        star_calls.append(1)
+        return star(*a, **kw)
+
+    monkeypatch.setattr(dedup, "connected_components_star", counting_star)
+    comp = semdedup(d, tau=math.cos(math.radians(4.5)), centroids=[[1.0, 0.0]],
+                    mode="component").collect()
+    assert star_calls == [1]
+    assert {r.vec_id: r.kept for r in comp} == {
+        i + 1: int(i == 0) for i in range(n)}
 
 
 def test_semdedup_rejects_unknown_mode(spark):

@@ -28,13 +28,14 @@ def fmt(df):
 
 def main():
     import __spark_entry__ as entry
+    from webextract.landed_queries import corpus_df
     from webextract.session import get_spark
     from webextract.sparkjob import extract_df
     from webextract.evaluate import per_doc_metrics
 
     spark = get_spark(app="plans", master="local[8]", shuffle_partitions=8)
     sf = "/root/testdata/sf0.01"
-    pages, truth = entry._corpus_df(spark, 600)
+    pages, truth = corpus_df(spark, 600)
 
     sections = []
 
