@@ -23,10 +23,10 @@ resource, hit an enrichment service):
 - Ordering inside a batch is preserved (results align positionally), so
   the output is deterministic given a deterministic client.
 
-The sandbox has no network, so the shippable client is a SEAM (same
-discipline as multimodal's decoder): ``FakeClient`` is deterministic and
-carries the tests; ``HttpClient`` names the real dependency to install and
-raises ``NotImplementedError`` until one is provided.
+The shippable client is a SEAM (same discipline as multimodal's decoder):
+any picklable factory of an :class:`AsyncClient` works — a real endpoint
+needs an async HTTP dependency (aiohttp/httpx) that this package does not
+install; ``FakeClient`` is the deterministic, network-free one.
 
 Scale shape: the stage adds zero shuffles (mapInPandas over whatever
 partitioning the input already has); wall-clock per task ~=
@@ -40,7 +40,7 @@ from __future__ import annotations
 import asyncio
 import hashlib
 from collections.abc import Iterator
-from typing import Any, Callable, Protocol
+from typing import Callable, Protocol
 
 from pyspark.sql import DataFrame, types as T
 
@@ -76,21 +76,7 @@ class FakeClient:
             self.in_flight -= 1
 
 
-class HttpClient:
-    """The real-endpoint seam. Install an async HTTP client (e.g. aiohttp
-    or httpx) and an endpoint URL, then implement ``complete``; everything
-    else in this module is production-ready as-is."""
-
-    def __init__(self, endpoint: str) -> None:
-        self.endpoint = endpoint
-
-    async def complete(self, text: str) -> str:
-        raise NotImplementedError(
-            "HttpClient needs a real async HTTP dependency (aiohttp/httpx) "
-            "— not available in this environment; use FakeClient for tests")
-
-
-def enrich_df(df: DataFrame, client_factory: Callable[[], Any], *,
+def enrich_df(df: DataFrame, client_factory: Callable[[], AsyncClient], *,
               text_col: str = "text", out_col: str = "enriched",
               max_in_flight: int = 8, timeout_s: float = 30.0) -> DataFrame:
     """Append ``(out_col, {out_col}_status, {out_col}_error)`` by driving

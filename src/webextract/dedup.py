@@ -10,7 +10,7 @@ codegen):
 - :func:`minhash_lsh_pairs`     — MinHash signatures + banded LSH: candidate
                                   generation cost is linear in corpus size;
                                   the scale path for 10^12 docs.
-- :func:`simhash_buckets`       — 64-bit SimHash fingerprints + band keys for
+- :func:`simhash`               — 64-bit SimHash fingerprints + band keys for
                                   Hamming-distance blocking.
 
 MinHash math: for each of ``num_perm`` permutations ``h_i(x) = xxhash64(x, i)``,
@@ -304,35 +304,6 @@ def simhash(df: DataFrame, *, text_col: str = "text", id_col: str = "url",
     return out
 
 
-def simhash_pairs(df: DataFrame, *, text_col: str = "text", id_col: str = "url",
-                  n: int = 2, bands: int = 4, max_hamming: int = 3,
-                  hash_fn: str = "xxhash64") -> DataFrame:
-    """Near-dup pairs: band-equality blocking, exact Hamming verification.
-
-    The blocking union/distinct carries bare id pairs; fingerprints are
-    re-joined per unique doc for the Hamming check (same shuffle-slimming
-    shape as :func:`minhash_lsh_pairs`).
-    """
-    s = simhash(df, text_col=text_col, id_col=id_col, n=n, bands=bands,
-                hash_fn=hash_fn)
-    pairs = None
-    for k in range(bands):
-        a = s.select(F.col("id").alias("id_a"), F.col(f"band{k}").alias("bk"))
-        b = s.select(F.col("id").alias("id_b"), F.col(f"band{k}").alias("bk"))
-        p = a.join(b, "bk").filter(F.col("id_a") < F.col("id_b")) \
-             .select("id_a", "id_b")
-        pairs = p if pairs is None else pairs.unionByName(p)
-    pairs = pairs.distinct()
-    ha = s.select(F.col("id").alias("id_a"), F.col("simhash").alias("ha"))
-    hb = s.select(F.col("id").alias("id_b"), F.col("simhash").alias("hb"))
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return (
-        pairs.join(ha, "id_a").join(hb, "id_b")
-        .select("id_a", "id_b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 # ---------------------------------------------------------------------------
 # cross-crawl incremental dedup
 # ---------------------------------------------------------------------------
@@ -340,8 +311,8 @@ def simhash_pairs(df: DataFrame, *, text_col: str = "text", id_col: str = "url",
 
 def _norm_text(text_col):
     """THE content normalization every fingerprint producer shares
-    (exact_duplicates, fingerprint_index, streaming.dedup_stream,
-    analysis.fingerprint) — change it in one place or not at all."""
+    (exact_duplicates, fingerprint_index, streaming.dedup_stream) —
+    change it in one place or not at all."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
 
@@ -382,37 +353,80 @@ def dedup_against_index(df: DataFrame, index: DataFrame, *,
 # ---------------------------------------------------------------------------
 
 
+# Hash-Min round budget: LSH near-dup components are quasi-cliques (2-3
+# rounds); a graph deeper than this is a chain, and star contraction wins
+_HASHMIN_ROUNDS = 25
+# star contraction needs O(log^2 n) rounds on any topology
+_STAR_ROUNDS = 40
+
+_INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
+
+
+def _require_integral_ids(fn: str, edges: DataFrame, src: str, dst: str,
+                          vertices: DataFrame | None, id_col: str) -> None:
+    """Component labels are long arithmetic: a cast from another id type
+    either fails inside a job (non-numeric strings) or silently merges
+    distinct ids (fractional values truncate), so the id types are checked
+    from the schema before any job runs."""
+    cols = [(edges, src), (edges, dst)]
+    if vertices is not None:
+        cols.append((vertices, id_col))
+    for df, c in cols:
+        t = dict(df.dtypes)[c]
+        if t not in _INTEGRAL_TYPES:
+            raise TypeError(
+                f"{fn}: id column {c!r} has type {t}; component labels "
+                "need an integral id — key string ids by xxhash64 upstream "
+                "(webextract.pipeline.curate does)")
+
+
 def connected_components(edges: DataFrame, *, src: str = "id_a",
                          dst: str = "id_b", vertices: DataFrame | None = None,
-                         id_col: str = "id",
-                         max_iter: int = 25) -> DataFrame:
-    """Cluster id per vertex = min vertex id reachable in the pair graph
-    (Hash-Min label propagation) — the step that turns near-dup PAIRS into
-    dedup GROUPS so one canonical document survives per cluster, even when
-    similarity is non-transitive (a~b, b~c, a!~c still collapses to one
-    cluster; reference parity: document-level dedup semantics of
-    document_extraction_tools' exporter, extended to near-dup groups).
+                         id_col: str = "id") -> DataFrame:
+    """Cluster id per vertex = min vertex id reachable in the pair graph —
+    the step that turns near-dup PAIRS into dedup GROUPS so one canonical
+    document survives per cluster, even when similarity is non-transitive
+    (a~b, b~c, a!~c still collapses to one cluster; reference parity:
+    document-level dedup semantics of document_extraction_tools' exporter,
+    extended to near-dup groups).
 
-    Algorithm: every vertex starts labeled with itself; each round every
+    The operator picks the algorithm from the graph, not the caller: it
+    runs Hash-Min label propagation with a fixed budget of
+    ``_HASHMIN_ROUNDS`` (25) label-changing rounds, and if the graph is
+    deeper than that (a similarity CHAIN) it reruns with
+    :func:`connected_components_star`. Both return the same labels.
+
+    Hash-Min: every vertex starts labeled with itself; each round every
     vertex takes the min of its own label and its neighbors' labels; stop
     when a round changes nothing. Rounds = graph diameter. Each round is ONE
     shuffle keyed on the (8-byte) vertex id, moving |E| label messages —
     never text, never signatures. LSH near-dup components are quasi-cliques
-    (diameter 2-3), so this converges in 2-3 rounds at any corpus size; for
-    adversarial long-chain graphs use :func:`connected_components_star`
-    (large-star/small-star contraction, O(log^2 n) rounds, same per-round
-    shuffle shape). If the round budget runs out this function RAISES
-    rather than returning silently-unconverged labels.
+    (diameter 2-3), so this converges in 2-3 rounds at any corpus size, in
+    fewer jobs than star contraction; on chains star needs O(log^2 n)
+    rounds where Hash-Min needs the diameter.
     The driver holds only the convergence counter; labels stay distributed
     (localCheckpoint per round cuts lineage — on a cluster use
     ``spark.sparkContext.setCheckpointDir`` + ``.checkpoint()``).
 
     Returns ``(id, cluster_id)`` for every vertex (singletons map to
     themselves when ``vertices`` is given; otherwise only endpoints).
-    Ids must be NUMERIC (they are cast to long; the exact decimal label-sum
-    convergence check depends on it) — key string ids by ``xxhash64`` first
-    (webextract.pipeline.curate does).
+    Ids must be INTEGRAL (the exact decimal label-sum convergence check
+    depends on it): other types raise ``TypeError`` before any job runs —
+    key string ids by ``xxhash64`` first (webextract.pipeline.curate does).
     """
+    _require_integral_ids("connected_components", edges, src, dst,
+                          vertices, id_col)
+    labels = _hashmin(edges, src, dst, vertices, id_col)
+    if labels is None:
+        return connected_components_star(edges, src=src, dst=dst,
+                                         vertices=vertices, id_col=id_col)
+    return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
+
+
+def _hashmin(edges: DataFrame, src: str, dst: str,
+             vertices: DataFrame | None, id_col: str) -> DataFrame | None:
+    """Hash-Min labels ``(id, label)``, or None if ``_HASHMIN_ROUNDS``
+    label-changing rounds do not reach the fixpoint."""
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).union(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
     if vertices is None:
@@ -436,11 +450,10 @@ def connected_components(edges: DataFrame, *, src: str = "id_a",
 
     labels = labels.localCheckpoint(eager=True)
     prev_sum = _label_sum(labels)
-    converged = False
-    # max_iter bounds label-CHANGING rounds; the +1 grants the no-change
-    # verification round, so a graph whose diameter is exactly max_iter
-    # converges instead of spuriously raising
-    for _ in range(max_iter + 1):
+    # the budget bounds label-CHANGING rounds; the +1 grants the no-change
+    # verification round, so a graph whose diameter equals the budget
+    # converges here instead of falling back
+    for _ in range(_HASHMIN_ROUNDS + 1):
         msgs = (sym.join(labels.withColumnRenamed("id", "a"), "a")
                    .select(F.col("b").alias("id"), "label"))
         new_labels = (labels.unionByName(msgs)
@@ -449,27 +462,15 @@ def connected_components(edges: DataFrame, *, src: str = "id_a",
         cur_sum = _label_sum(new_labels)
         labels = new_labels
         if cur_sum == prev_sum:
-            converged = True
-            break
+            return labels
         prev_sum = cur_sum
-    if not converged:
-        # returning unconverged labels would silently split clusters —
-        # fail LOUDLY instead (reference parity: a failing stage surfaces,
-        # it never corrupts output; extraction_orchestrator.py:232-242)
-        raise RuntimeError(
-            f"connected_components: no fixpoint after max_iter={max_iter} "
-            f"rounds — the pair graph's diameter exceeds the round budget "
-            f"(adversarial chain graph?). Raise max_iter, or use "
-            f"connected_components_star (large-star/small-star, O(log^2 n) "
-            f"rounds) for long-chain graphs.")
-    return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
+    return None
 
 
 def connected_components_star(edges: DataFrame, *, src: str = "id_a",
                               dst: str = "id_b",
                               vertices: DataFrame | None = None,
-                              id_col: str = "id",
-                              max_iter: int = 40) -> DataFrame:
+                              id_col: str = "id") -> DataFrame:
     """Connected components via alternating large-star / small-star edge
     contraction (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14) — the long-chain-safe variant of
@@ -490,8 +491,12 @@ def connected_components_star(edges: DataFrame, *, src: str = "id_a",
     fixpoint (checked by exact decimal endpoint-sum + count signature —
     equal signature on the SAME cardinality only happens at the fixpoint
     because endpoint sums strictly decrease while edges churn). Ids must be
-    numeric, like :func:`connected_components`.
+    integral, like :func:`connected_components`. Call it directly only to
+    pin star semantics (q80); :func:`connected_components` already falls
+    back to it on deep graphs.
     """
+    _require_integral_ids("connected_components_star", edges, src, dst,
+                          vertices, id_col)
     e = (edges.select(F.col(src).cast("long").alias("x"),
                       F.col(dst).cast("long").alias("y"))
          .filter(F.col("x") != F.col("y"))
@@ -508,7 +513,7 @@ def connected_components_star(edges: DataFrame, *, src: str = "id_a",
 
     prev = _sig(e)
     converged = False
-    for _ in range(max_iter + 1):  # +1: the no-change verification round
+    for _ in range(_STAR_ROUNDS + 1):  # +1: the no-change verification round
         # r6 plan shape: each star phase keys ALL its operations on one
         # explicit repartition — the min-aggregate, the join back, and the
         # dedup all satisfy their distribution from the same exchange
@@ -543,9 +548,9 @@ def connected_components_star(edges: DataFrame, *, src: str = "id_a",
         prev = cur
     if not converged:
         raise RuntimeError(
-            f"connected_components_star: no fixpoint after "
-            f"max_iter={max_iter} rounds (O(log^2 n) expected — is the "
-            f"input astronomically large, or max_iter tiny?)")
+            f"connected_components_star: no fixpoint after {_STAR_ROUNDS} "
+            f"rounds (O(log^2 n) expected — is the input astronomically "
+            f"large?)")
     # at the fixpoint every edge points (member -> component minimum)
     labels = e.select(F.col("hi").alias("id"), F.col("lo").alias("label")) \
               .groupBy("id").agg(F.min("label").alias("label"))

@@ -970,7 +970,10 @@ FROM read_parquet('{_Q80_LAND}/vertices/*.parquet')
     doc="long-chain-safe connected components: star contraction must "
         "converge on chains, stars centered off-minimum, and bridged "
         "composites — label = component minimum for every vertex, "
-        "singletons included via the ``vertices`` frame.",
+        "singletons included via the ``vertices`` frame. Calls "
+        "dedup.connected_components_star directly to pin star's "
+        "semantics: dedup.connected_components would reach the same "
+        "labels by first running Hash-Min on these chains.",
 )
 def q80(spark, sf_dir):
     from .dedup import connected_components_star

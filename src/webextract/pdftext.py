@@ -111,7 +111,3 @@ def extract_pdf_pages(raw: bytes) -> list[list[str]]:
             pages.append(paragraphs)
     return pages
 
-
-def extract_pdf_text(raw: bytes) -> list[str]:
-    """All paragraphs across pages, document order (flattened view)."""
-    return [p for page in extract_pdf_pages(raw) for p in page]

@@ -67,10 +67,6 @@ def register(name: str, sql: str | None, doc: str = ""):
     return deco
 
 
-def registry() -> dict[str, QuerySpec]:
-    return dict(_REGISTRY)
-
-
 # --------------------------------------------------------------------------
 # Relational surface (SURVEY.md §2.2): scan/filter/project, agg, join,
 # window, sort/top-k, set ops, anti-join, rollup
@@ -838,16 +834,16 @@ JOIN (SELECT cluster_id, COUNT(*) AS cluster_size
 @register(
     "q37_dedup_clusters",
     _Q37_SQL,
-    doc="near-dup CLUSTER ASSIGNMENT: connected components (Hash-Min label "
-        "propagation, dedup.connected_components) over the q17 MinHash-LSH "
-        "pair graph — the step that turns pairwise candidates into dedup "
-        "groups so one canonical doc survives per cluster even when "
-        "similarity is non-transitive. Each round is one shuffle keyed on "
-        "the 8-byte vertex id; LSH components are quasi-cliques so 2-3 "
-        "rounds close at any corpus size. Large-star/small-star "
-        "(dedup.connected_components_star, pinned by q80) is the long-chain "
-        "alternative: on this graph Hash-Min runs fewer jobs, on q80's "
-        "chains star does, so each keeps the graph shape it wins on. "
+    doc="near-dup CLUSTER ASSIGNMENT: connected components "
+        "(dedup.connected_components) over the q17 MinHash-LSH pair graph "
+        "— the step that turns pairwise candidates into dedup groups so "
+        "one canonical doc survives per cluster even when similarity is "
+        "non-transitive. The operator runs Hash-Min label propagation with "
+        "a 25-round budget and reruns with large-star/small-star "
+        "contraction (pinned by q80) only if the graph is deeper. Each "
+        "Hash-Min round is one shuffle keyed on the 8-byte vertex id; LSH "
+        "components are quasi-cliques so 2-3 rounds close at any corpus "
+        "size and the fallback does not fire here. "
         "Oracle: DuckDB recursive CTE computes min-reachable-id per vertex "
         "over the same pair SQL.",
 )
@@ -2896,7 +2892,7 @@ FROM w, tot t
         "to a decimal isqrt; shape unchanged) — normalized to an integer "
         "ppm quota with div. Plan: one source-sized aggregate + one "
         "scalar-broadcast normalization; downstream sampling consumes the "
-        "quota with sampling.hash_sample (q38's deterministic gate).",
+        "quota with sampling.stratified_sample (q38's deterministic gate).",
 )
 def q72(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")

@@ -40,14 +40,6 @@ def hash_bucket(key: Column | str, *, buckets: int = 1000,
     return F.pmod(fn(c.cast("string")), F.lit(buckets))
 
 
-def hash_sample(df: DataFrame, *, key_col: str, permille: int,
-                hash_fn: str = "md5_60") -> DataFrame:
-    """Keep ``permille``/1000 of rows, decided per key — deterministic
-    across reruns and engines."""
-    return df.filter(
-        hash_bucket(key_col, buckets=1000, hash_fn=hash_fn) < permille)
-
-
 def stratified_sample(df: DataFrame, *, key_col: str, strata_col: str,
                       rates: dict[str, int], default_permille: int = 1000,
                       hash_fn: str = "md5_60",

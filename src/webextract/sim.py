@@ -489,12 +489,6 @@ def pairwise_near(df: DataFrame, *, tau: float, vec_col: str = "embedding",
     return _near_pairs_grouped(v, tau, id_type).distinct()
 
 
-# Hash-Min round budget for semdedup's component mode: within-cluster
-# near-dup graphs are quasi-cliques (2-3 rounds); a deeper similarity chain
-# falls back to star contraction
-_SEMDEDUP_CC_ROUNDS = 25
-
-
 def semdedup(df: DataFrame, *, tau: float,
              centroids: list[list[float]] | None = None,
              n_centroids: int = 8, n_iter: int = 2,
@@ -521,16 +515,14 @@ def semdedup(df: DataFrame, *, tau: float,
       components of the above-``tau`` pair graph (within clusters — edges
       never cross clusters) and exactly the min id of each group survives,
       so every dropped vector is transitively linked to its kept
-      representative. Ids must be INTEGRAL (the CC label arithmetic casts
-      to long) — non-integral id columns raise ``TypeError``; key string
+      representative. Ids must be INTEGRAL (the CC label arithmetic is
+      long) — non-integral id columns raise ``TypeError``; key string
       ids by ``xxhash64`` upstream (``"minid"`` accepts any orderable id).
-      Components come from Hash-Min with a fixed 25-round diameter budget
-      — within-cluster near-dup graphs are quasi-cliques, 2-3 rounds — and
-      on a budget blowout (a drifting-template similarity CHAIN deeper
-      than the budget) from
-      :func:`webextract.dedup.connected_components_star` (O(log^2 n)
-      rounds on any topology). Each wins on one graph shape, and both
-      return the same (id, cluster_id = component min).
+      Components come from :func:`webextract.dedup.connected_components`,
+      which runs Hash-Min with a fixed 25-round diameter budget —
+      within-cluster near-dup graphs are quasi-cliques, 2-3 rounds — and
+      reruns with star contraction (O(log^2 n) rounds on any topology)
+      when a drifting-template similarity CHAIN is deeper than the budget.
       Neither keep rule subsumes the other: on edges (1,3),(2,3) minid
       keeps {1,2} while component keeps {1} (2 and 3 share the group
       through 3).
@@ -559,24 +551,10 @@ def semdedup(df: DataFrame, *, tau: float,
     pairs = pairwise_near(assigned, tau=tau, vec_col=vec_col, id_col=id_col,
                           block_col="cluster")
     if mode == "component":
-        from .dedup import connected_components, connected_components_star
+        from .dedup import connected_components
 
-        # loud guard: CC casts ids to long, so a string id column would
-        # become all-NULL join keys and "converge" to zero dedup silently
-        dt = dict(df.dtypes)[id_col]
-        if dt not in ("tinyint", "smallint", "int", "bigint"):
-            raise TypeError(
-                f"semdedup(mode='component'): id column {id_col!r} has "
-                f"type {dt}; connected-components label arithmetic needs "
-                "an integral id — key string ids by xxhash64 upstream "
-                "(mode='minid' accepts any orderable id type)")
-        try:
-            comp = connected_components(pairs, src="id_a", dst="id_b",
-                                        max_iter=_SEMDEDUP_CC_ROUNDS)
-        except RuntimeError:
-            # diameter blowout (similarity chain): rerun with the
-            # long-chain-safe contraction
-            comp = connected_components_star(pairs, src="id_a", dst="id_b")
+        # raises TypeError on non-integral ids before any job runs
+        comp = connected_components(pairs, src="id_a", dst="id_b")
         # group min survives: cluster_id IS the component min
         dropped = (comp.filter(F.col("id") != F.col("cluster_id"))
                    .select(F.col("id").alias(id_col)))

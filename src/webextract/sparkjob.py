@@ -150,30 +150,23 @@ def _input_bytes(df: DataFrame) -> int:
     return total
 
 
-def pick_partitions(df: DataFrame, target_bytes: int = 96 * 1024 * 1024,
-                    default: int = 32) -> int:
+# per-task html bytes the repartition aims for, and its floor
+_TARGET_PARTITION_BYTES = 96 * 1024 * 1024
+_MIN_PARTITIONS = 32
+
+
+def pick_partitions(df: DataFrame) -> int:
     """Partition count from input size, not a constant.
 
     At 100 TB this is what keeps per-task work bounded (~96 MiB of html per
-    task); locally it collapses to the core count. Resolution order:
+    task); locally it collapses to the floor of 32. Input bytes come from:
 
-    1. ``spark.webextract.extract.partitions`` session conf — the explicit
-       cluster-operator override;
-    2. public ``df.inputFiles()`` byte-summing (local/file scans);
-    3. the optimizer's byte statistics via the private ``_jdf`` handle —
+    1. public ``df.inputFiles()`` byte-summing (local/file scans);
+    2. the optimizer's byte statistics via the private ``_jdf`` handle —
        works for remote stores, but may break on Spark upgrades, hence last;
-    4. ``default``.
+    3. neither: the floor. Callers that know better pass
+       ``extract_df(num_partitions=)``.
     """
-    try:
-        conf = df.sparkSession.conf.get("spark.webextract.extract.partitions", None)
-    except Exception:  # noqa: BLE001 — conf surface unavailable: keep resolving
-        conf = None
-    if conf is not None and conf != "":
-        n = int(conf)  # an explicit operator override must apply or FAIL loudly
-        if n <= 0:
-            raise ValueError(
-                f"spark.webextract.extract.partitions must be positive, got {conf!r}")
-        return n
     nbytes = 0
     try:
         nbytes = _input_bytes(df)
@@ -185,14 +178,14 @@ def pick_partitions(df: DataFrame, target_bytes: int = 96 * 1024 * 1024,
                 df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes(),
                 1 << 60))
         except Exception:  # noqa: BLE001 — stats unavailable → fall back
-            return default
+            return _MIN_PARTITIONS
     if nbytes <= 0:
-        return default
-    return max(default, min(1_000_000, nbytes // target_bytes + 1))
+        return _MIN_PARTITIONS
+    return max(_MIN_PARTITIONS,
+               min(1_000_000, nbytes // _TARGET_PARTITION_BYTES + 1))
 
 
-def extract_df(pages: DataFrame, *, salt: int = DEFAULT_SALT,
-               num_partitions: int | None = None,
+def extract_df(pages: DataFrame, *, num_partitions: int | None = None,
                repartition: bool = True,
                link_density_max: float = 0.5,
                min_chars_linked: int = 25) -> DataFrame:
@@ -215,7 +208,7 @@ def extract_df(pages: DataFrame, *, salt: int = DEFAULT_SALT,
     df = pages.select(*cols)
     if repartition:
         n = num_partitions or pick_partitions(df)
-        df = df.repartition(n, F.xxhash64(F.col("url"), F.lit(salt)))
+        df = df.repartition(n, F.xxhash64(F.col("url"), F.lit(DEFAULT_SALT)))
     fn = make_extract_batches(link_density_max, min_chars_linked)
     return df.mapInPandas(fn, schema=EXTRACTED_SCHEMA)
 

@@ -33,16 +33,13 @@ PAGES_SCHEMA = T.StructType([
 ])
 
 
-def read_pages_stream(spark: SparkSession, input_dir: str,
-                      max_files_per_trigger: int | None = None) -> DataFrame:
+def read_pages_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """Streaming source over a landing directory of web-pages parquet files."""
-    r = (spark.readStream.schema(PAGES_SCHEMA)
-         # landing areas often contain writer-job subdirectories; pick up
-         # part files at any depth
-         .option("recursiveFileLookup", "true"))
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    return r.parquet(input_dir)
+    return (spark.readStream.schema(PAGES_SCHEMA)
+            # landing areas often contain writer-job subdirectories; pick
+            # up part files at any depth
+            .option("recursiveFileLookup", "true")
+            .parquet(input_dir))
 
 
 def extract_stream(pages_stream: DataFrame) -> DataFrame:
@@ -50,44 +47,19 @@ def extract_stream(pages_stream: DataFrame) -> DataFrame:
     return extract_df(pages_stream, repartition=False)
 
 
-def windowed_metrics(extracted_stream: DataFrame, *, window: str = "1 hour",
-                     watermark: str = "2 hours") -> DataFrame:
-    """Stateful branch: per-(crawl-window, status) doc counts + bytes.
-
-    Event time is ``warc_ts`` (the crawl timestamp), so late-arriving WARC
-    segments update the right window until the watermark closes it — the
-    streaming analog of the batch metrics table (runner.py). Output mode
-    for the sink should be ``append`` (finalized windows only).
-    """
-    from pyspark.sql import functions as F
-
-    return (
-        extracted_stream
-        .withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), F.col("status"))
-        .agg(F.count("*").alias("docs"),
-             F.sum(F.octet_length("text")).alias("bytes_extracted"))
-        .select(F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"),
-                "status", "docs", "bytes_extracted")
-    )
-
-
-def start_metrics_stream(spark: SparkSession, input_dir: str, output_dir: str,
-                         checkpoint_dir: str, *, window: str = "1 hour",
-                         watermark: str = "2 hours",
-                         available_now: bool = False):
-    """Source → extract → watermarked windowed aggregation → parquet sink."""
-    m = windowed_metrics(extract_stream(read_pages_stream(spark, input_dir)),
-                         window=window, watermark=watermark)
-    w = (
-        m.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
+def _start_sink(stream: DataFrame, output_dir: str, checkpoint_dir: str, *,
+                available_now: bool, trigger_interval: str | None = None):
+    """Append ``stream`` to a checkpointed parquet sink and start it:
+    ``available_now`` drains what has landed and stops; otherwise the query
+    runs continuously (every ``trigger_interval`` when given)."""
+    w = (stream.writeStream.format("parquet")
+         .option("path", output_dir)
+         .option("checkpointLocation", checkpoint_dir)
+         .outputMode("append"))
     if available_now:
         w = w.trigger(availableNow=True)
+    elif trigger_interval:
+        w = w.trigger(processingTime=trigger_interval)
     return w.start()
 
 
@@ -125,15 +97,8 @@ def start_session_stream(spark: SparkSession, input_dir: str, output_dir: str,
     """Source → extract → watermarked session windows → parquet sink."""
     m = session_metrics(extract_stream(read_pages_stream(spark, input_dir)),
                         key=key, gap=gap, watermark=watermark)
-    w = (
-        m.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_sink(m, output_dir, checkpoint_dir,
+                       available_now=available_now)
 
 
 DEDUP_OUT_SCHEMA = T.StructType([
@@ -244,23 +209,16 @@ def dedup_stream(extracted_stream: DataFrame, *, text_col: str = "text",
     )
 
 
-#: session conf → the RocksDB state store (spills seen-key state to local
-#: disk instead of executor heap — the 10^12-key deployment setting; ships
-#: with Spark 4, no extra jar)
+#: set as ``spark.sql.streaming.stateStore.providerClass`` BEFORE a query
+#: starts (checkpointed queries pin their provider at first start) to keep
+#: stateful-streaming state in RocksDB on executor local disk instead of
+#: heap — the 10^12-key deployment setting; ships with Spark 4, no extra jar
 ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming."
                     "state.RocksDBStateStoreProvider")
 
 
-def use_rocksdb_state_store(spark: SparkSession) -> None:
-    """Switch stateful streaming to RocksDB-backed state (set BEFORE a query
-    starts; checkpointed queries pin their provider at first start)."""
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                   ROCKSDB_PROVIDER)
-
-
 def start_dedup_stream(spark: SparkSession, input_dir: str, output_dir: str,
                        checkpoint_dir: str, *, available_now: bool = False,
-                       max_files_per_trigger: int | None = None,
                        ttl: str | int | None = None,
                        trigger_interval: str | None = None):
     """Source → extract → stateful first-occurrence dedup → parquet sink.
@@ -278,47 +236,27 @@ def start_dedup_stream(spark: SparkSession, input_dir: str, output_dir: str,
     the continuous trigger's idle batches are exactly what fires evictions.
     Pair a TTL with ``trigger_interval`` (e.g. ``"30 seconds"``) in
     production so those cleanup batches tick at a bounded rate instead of
-    hot-looping, and with :func:`use_rocksdb_state_store` so seen-key state
-    lives on executor local disk rather than heap.
+    hot-looping, and with the :data:`ROCKSDB_PROVIDER` state store so
+    seen-key state lives on executor local disk rather than heap.
     """
     if ttl is not None and available_now:
         raise ValueError(
             "ttl with available_now never terminates (ProcessingTimeTimeout "
             "schedules endless state-cleanup batches); run the TTL'd stream "
             "with a continuous trigger, or drop ttl for a finite catch-up")
-    extracted = extract_stream(
-        read_pages_stream(spark, input_dir, max_files_per_trigger))
+    extracted = extract_stream(read_pages_stream(spark, input_dir))
     deduped = dedup_stream(extracted.filter("status = 'ok'"), ttl=ttl)
-    w = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    elif trigger_interval:
-        w = w.trigger(processingTime=trigger_interval)
-    return w.start()
+    return _start_sink(deduped, output_dir, checkpoint_dir,
+                       available_now=available_now,
+                       trigger_interval=trigger_interval)
 
 
 def start_extraction_stream(spark: SparkSession, input_dir: str, output_dir: str,
-                            checkpoint_dir: str, *, available_now: bool = False,
-                            max_files_per_trigger: int | None = None):
+                            checkpoint_dir: str, *, available_now: bool = False):
     """Wire source → extract → sink; returns the StreamingQuery.
 
     ``available_now=True`` processes everything currently in ``input_dir``
     then stops — incremental catch-up mode.
     """
-    extracted = extract_stream(
-        read_pages_stream(spark, input_dir, max_files_per_trigger))
-    w = (
-        extracted.writeStream
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_sink(extract_stream(read_pages_stream(spark, input_dir)),
+                       output_dir, checkpoint_dir, available_now=available_now)

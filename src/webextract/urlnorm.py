@@ -68,6 +68,3 @@ def sum_or(conds: list[Column]) -> Column:
         out = out | c
     return out
 
-
-def canonical_url_df(df: DataFrame, *, url_col: str = "url") -> DataFrame:
-    return df.withColumn("canonical_url", canonical_url(url_col))

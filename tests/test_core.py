@@ -9,7 +9,7 @@ from webextract.corpus import make_corpus, make_pdf, write_corpus_parquet
 from webextract.extract import extract_document
 from webextract.heuristics import CLASS_BLOCKLIST, is_boilerplate
 from webextract.htmlblocks import parse_blocks
-from webextract.pdftext import extract_pdf_text
+from webextract.pdftext import extract_pdf_pages
 from webextract.textnorm import join_blocks, normalize_ws
 
 N = 1000
@@ -91,7 +91,7 @@ def test_pdf_roundtrip():
     paras = ["Hello world paragraph one.", "Second (with) \\ parens."]
     for compress in (True, False):
         raw = make_pdf(paras, compress=compress)
-        assert extract_pdf_text(raw) == paras
+        assert [p for page in extract_pdf_pages(raw) for p in page] == paras
         r = extract_document(raw)
         assert r.status == "ok" and r.content_type == "pdf"
         assert r.text == "\n\n".join(paras)

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from webextract.analysis import repetition_df, top_terms
 from webextract.dedup import connected_components
-from webextract.sampling import hash_sample, stratified_sample
+from webextract.sampling import stratified_sample
 
 
 # ---------------------------------------------------------------------------
@@ -52,12 +52,17 @@ def _docs(spark, n=400):
     return spark.createDataFrame(rows, "doc_id long, lang string")
 
 
+def _hash_sample(df, *, permille, hash_fn="md5_60"):
+    """One keep rate for every row: the stratified gate with no strata."""
+    return stratified_sample(df, key_col="doc_id", strata_col="lang",
+                             rates={}, default_permille=permille,
+                             hash_fn=hash_fn, bucket_out=None)
+
+
 def test_hash_sample_deterministic_and_engine_stable(spark):
     d = _docs(spark)
-    a = {r["doc_id"] for r in hash_sample(d, key_col="doc_id",
-                                          permille=250).collect()}
-    b = {r["doc_id"] for r in hash_sample(d, key_col="doc_id",
-                                          permille=250).collect()}
+    a = {r["doc_id"] for r in _hash_sample(d, permille=250).collect()}
+    b = {r["doc_id"] for r in _hash_sample(d, permille=250).collect()}
     assert a == b and 0 < len(a) < 400
 
 
@@ -85,7 +90,7 @@ def test_stratified_rates_and_growth_stability(spark):
 
 def test_xxhash_production_path(spark):
     d = _docs(spark)
-    kept = hash_sample(d, key_col="doc_id", permille=500, hash_fn="xxhash64")
+    kept = _hash_sample(d, permille=500, hash_fn="xxhash64")
     n = kept.count()
     assert 120 < n < 280  # ~50% of 400, loose binomial bounds
 
@@ -144,14 +149,16 @@ def test_top_terms_counts_and_tiebreak(spark):
 
 
 def test_pii_redaction_counts_and_scrub(spark):
-    from webextract.analysis import pii_redact_df
+    from webextract.analysis import pii_redact_columns
 
     d = spark.createDataFrame(
         [(1, "mail a.b+c@sub.example.org and x@y.io or call 212-555-0101"),
          (2, "no pii here"),
          (3, "half@match@nope 123-45-6789")],
         "doc_id long, text string")
-    got = {r["doc_id"]: r.asDict() for r in pii_redact_df(d).collect()}
+    counts, red = pii_redact_columns("text")
+    got = {r["doc_id"]: r.asDict() for r in
+           d.select("doc_id", *counts, red.alias("text_redacted")).collect()}
     assert got[1]["n_email"] == 2 and got[1]["n_phone"] == 1
     assert got[1]["text_redacted"] == "mail <EMAIL> and <EMAIL> or call <PHONE>"
     assert got[2]["n_email"] == 0 and got[2]["text_redacted"] == "no pii here"

@@ -9,7 +9,6 @@ from webextract.dedup import (
     exact_duplicates,
     jaccard_pairs,
     minhash_lsh_pairs,
-    simhash_pairs,
 )
 from webextract.sim import (
     ann_topk,
@@ -108,17 +107,6 @@ def test_minhash_on_driver_documents(spark):
     assert exact <= got
 
 
-def test_simhash_pairs(docs):
-    """16 4-bit bands guarantee a shared band up to hamming 15 (pigeonhole);
-    1-word edits land well inside a 10-bit budget on these 80-token docs."""
-    got = {(r.id_a, r.id_b): r.hamming for r in
-           simhash_pairs(docs, n=2, bands=16, max_hamming=10).collect()}
-    for i in range(5):  # exact copies: identical fingerprint
-        assert got.get((f"doc{i:03d}", f"dup{i:03d}")) == 0
-    for i in range(5):  # single-word edits: within the hamming budget
-        assert (f"doc{20+i:03d}", f"sim{i:03d}") in got
-
-
 @pytest.fixture(scope="module")
 def clustered_embeddings(spark):
     """5 clusters of 20 vectors each, tight noise — ANN ground truth known."""
@@ -206,20 +194,6 @@ def test_minhash_candidate_exchange_carries_no_signatures(spark):
                  if "HashAggregate(keys=[id_a" in ln]
     assert key_lines, "expected a distinct aggregate on (id_a, id_b)"
     assert all("sig" not in ln for ln in key_lines), key_lines
-
-
-def test_simhash_pair_blocking_carries_no_fingerprints(spark):
-    from webextract.dedup import simhash_pairs
-
-    df = spark.createDataFrame(
-        [(f"u{i}", "alpha beta gamma delta epsilon " * 5) for i in range(8)],
-        "url string, text string")
-    out = simhash_pairs(df, n=2, bands=4, max_hamming=64)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    key_lines = [ln for ln in plan.splitlines()
-                 if "HashAggregate(keys=[id_a" in ln]
-    assert key_lines, "expected a distinct aggregate on (id_a, id_b)"
-    assert all(" ha" not in ln and " hb" not in ln for ln in key_lines), key_lines
 
 
 def test_md5_minhash_mode_finds_planted_pairs(spark):
@@ -393,32 +367,53 @@ def test_best_copy_string_ids(spark):
     assert got["http://a/z"]["is_kept"] == 0
 
 
-def test_cc_hashmin_raises_loudly_on_chain_budget(spark):
-    import pytest
+def _counting_star(monkeypatch):
+    """Patch dedup's star contraction to record each call; return the log."""
+    from webextract import dedup
 
-    from webextract.dedup import connected_components
+    calls = []
+    star = dedup.connected_components_star
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return star(*a, **kw)
+
+    monkeypatch.setattr(dedup, "connected_components_star", counting)
+    return calls
+
+
+def test_cc_hashmin_falls_back_to_star_on_chain_budget(spark, monkeypatch):
+    from webextract import dedup
 
     # a 30-node chain has diameter 29: 3 hash-min rounds CANNOT converge —
-    # the engine must refuse to return silently-unconverged labels
+    # the operator must not return unconverged labels; it reruns with star
+    monkeypatch.setattr(dedup, "_HASHMIN_ROUNDS", 3)
+    calls = _counting_star(monkeypatch)
     edges = spark.createDataFrame([(i, i + 1) for i in range(29)],
                                   "id_a long, id_b long")
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(edges, max_iter=3)
+    got = {(r["id"], r["cluster_id"])
+           for r in dedup.connected_components(edges).collect()}
+    assert calls == [1]
+    assert got == {(i, 0) for i in range(30)}
 
 
-def test_cc_star_matches_hashmin_and_handles_chains(spark):
+def test_cc_star_matches_hashmin_and_handles_chains(spark, monkeypatch):
     import random
 
+    from webextract import dedup
     from webextract.dedup import connected_components, connected_components_star
 
-    # long chain: star converges in O(log^2 n) rounds where hash-min needs 59
+    # long chain: star converges in O(log^2 n) rounds where hash-min needs
+    # 59 — a 10-round star budget must suffice (star raises past it)
     chain = spark.createDataFrame([(i, i + 1) for i in range(59)],
                                   "id_a long, id_b long")
+    monkeypatch.setattr(dedup, "_STAR_ROUNDS", 10)
     star = {(r["id"], r["cluster_id"])
-            for r in connected_components_star(chain, max_iter=10).collect()}
+            for r in connected_components_star(chain).collect()}
     assert star == {(i, 0) for i in range(60)}
+    monkeypatch.undo()
 
-    # random graphs: star == hash-min (with a generous round budget) exactly
+    # random graphs: star == connected_components (Hash-Min here) exactly
     rng = random.Random(7)
     for trial in range(3):
         n = 40
@@ -427,10 +422,9 @@ def test_cc_star_matches_hashmin_and_handles_chains(spark):
         df = spark.createDataFrame(edges, "id_a long, id_b long")
         verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
         a = {(r["id"], r["cluster_id"]) for r in
-             connected_components(df, vertices=verts, max_iter=50).collect()}
+             connected_components(df, vertices=verts).collect()}
         b = {(r["id"], r["cluster_id"]) for r in
-             connected_components_star(df, vertices=verts,
-                                       max_iter=30).collect()}
+             connected_components_star(df, vertices=verts).collect()}
         assert a == b, (trial, sorted(a - b)[:5], sorted(b - a)[:5])
 
 
@@ -462,21 +456,51 @@ def test_strip_common_paragraphs(spark):
     assert got["clean_text"] == "head\n\nmiddle\n\ntail"
 
 
-def test_cc_converges_when_diameter_equals_max_iter(spark):
-    import pytest
+def test_cc_converges_when_diameter_equals_max_iter(spark, monkeypatch):
+    from webextract import dedup
 
-    from webextract.dedup import connected_components
-
-    # chain 0-1-2-3-4-5: diameter 5 needs 5 label-changing rounds; max_iter
-    # bounds CHANGING rounds, with one extra verification round granted —
-    # so max_iter=5 converges and max_iter=4 raises
+    # chain 0-1-2-3-4-5: diameter 5 needs 5 label-changing rounds; the
+    # Hash-Min budget bounds CHANGING rounds, with one extra verification
+    # round granted — so a budget of 5 converges without star and a budget
+    # of 4 falls back to it, with the same labels either way
+    calls = _counting_star(monkeypatch)
     edges = spark.createDataFrame([(i, i + 1) for i in range(5)],
                                   "id_a long, id_b long")
+    want = {(i, 0) for i in range(6)}
+    monkeypatch.setattr(dedup, "_HASHMIN_ROUNDS", 5)
     got = {(r["id"], r["cluster_id"])
-           for r in connected_components(edges, max_iter=5).collect()}
-    assert got == {(i, 0) for i in range(6)}
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(edges, max_iter=4)
+           for r in dedup.connected_components(edges).collect()}
+    assert (got, calls) == (want, [])
+    monkeypatch.setattr(dedup, "_HASHMIN_ROUNDS", 4)
+    got = {(r["id"], r["cluster_id"])
+           for r in dedup.connected_components(edges).collect()}
+    assert (got, calls) == (want, [1])
+
+
+def test_cc_rejects_non_integral_ids_before_any_job(spark):
+    """A non-integral id either fails inside a job (non-numeric strings)
+    or truncates into another id (1.5 -> 1); the dtype check reads the
+    schema, so it raises before any job runs."""
+    from webextract.dedup import connected_components
+
+    sc = spark.sparkContext
+    longs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    cases = [
+        (spark.createDataFrame([("a", "b")], "id_a string, id_b string"),
+         None),
+        (longs, spark.createDataFrame([("a",)], "id string")),
+        (spark.createDataFrame([(1.0, 2.0)], "id_a double, id_b double"),
+         None),
+    ]
+    for i, (edges, verts) in enumerate(cases):
+        group = f"cc-dtype-check-{i}"
+        sc.setJobGroup(group, "connected_components dtype check")
+        try:
+            with pytest.raises(TypeError, match="integral"):
+                connected_components(edges, vertices=verts)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 # ---------------------------------------------------------------------------

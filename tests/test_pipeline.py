@@ -168,3 +168,30 @@ def test_semdedup_plan_is_cluster_blocked(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+def test_curate_survives_a_near_dup_chain_deeper_than_hashmin_budget(spark):
+    """Sliding 30-token windows over one random 600-token sequence: each doc
+    is a near-dup of the next few, so the LSH pair graph is a chain far
+    deeper than Hash-Min's round budget. curate must fall back to star
+    contraction and keep one doc per component of that graph."""
+    import random
+
+    from webextract.dedup import connected_components_star, minhash_lsh_pairs
+
+    rng = random.Random(7)
+    seq = [f"t{rng.randrange(10**6):06d}" for _ in range(600)]
+    rows = [(f"http://chain.example/{i:03d}", " ".join(seq[i:i + 30]), "en")
+            for i in range(250)]
+    df = spark.createDataFrame(rows, "url string, text string, lang string")
+
+    out, report = curate(df)
+    assert report["after_exact_dedup"] == 250, report
+
+    pairs = minhash_lsh_pairs(df, n=2).select(
+        F.xxhash64("id_a").alias("id_a"), F.xxhash64("id_b").alias("id_b"))
+    comps = connected_components_star(
+        pairs, vertices=df.select(F.xxhash64("url").alias("id")))
+    n_comps = comps.select("cluster_id").distinct().count()
+    assert report["after_near_dedup"] == n_comps == report["final"], report
+    out.unpersist()

@@ -215,21 +215,19 @@ def test_null_expected_text_scores_null_on_every_metric(spark):
     assert rows["u2"].exact_match == 1.0 and rows["u2"].similarity == 1.0
 
 
-def test_pick_partitions_paths(spark, corpus_dir, pages):
+def test_pick_partitions_paths(spark, corpus_dir, pages, monkeypatch):
+    from webextract import sparkjob
     from webextract.sparkjob import pick_partitions
 
     # file-backed scan: sizes come from public inputFiles() stat
-    n = pick_partitions(pages, target_bytes=64 * 1024, default=2)
+    monkeypatch.setattr(sparkjob, "_TARGET_PARTITION_BYTES", 64 * 1024)
+    monkeypatch.setattr(sparkjob, "_MIN_PARTITIONS", 2)
+    n = pick_partitions(pages)
     assert n >= 2
-    # non-file DataFrame: falls back (stats or default), never raises
+    # non-file DataFrame: falls back (stats or the floor), never raises
+    monkeypatch.setattr(sparkjob, "_MIN_PARTITIONS", 7)
     inline = spark.createDataFrame([(1,)], "a int")
-    assert pick_partitions(inline, default=7) >= 1
-    # conf override wins
-    spark.conf.set("spark.webextract.extract.partitions", "13")
-    try:
-        assert pick_partitions(pages) == 13
-    finally:
-        spark.conf.unset("spark.webextract.extract.partitions")
+    assert pick_partitions(inline) >= 1
 
 
 def test_empty_waves_commit_cleanly(spark, tmp_path):

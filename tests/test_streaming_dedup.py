@@ -152,7 +152,7 @@ def test_stream_dedup_on_rocksdb_state_store(spark, tmp_path):
     same first-wins semantics, restart-safe via the checkpoint."""
     from datetime import datetime
 
-    from webextract.streaming import ROCKSDB_PROVIDER, use_rocksdb_state_store
+    from webextract.streaming import ROCKSDB_PROVIDER
 
     land = str(tmp_path / "landing")
     out = str(tmp_path / "out")
@@ -160,9 +160,8 @@ def test_stream_dedup_on_rocksdb_state_store(spark, tmp_path):
     ts = datetime(2026, 1, 1)
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key, None)
-    use_rocksdb_state_store(spark)
+    spark.conf.set(key, ROCKSDB_PROVIDER)
     try:
-        assert spark.conf.get(key) == ROCKSDB_PROVIDER
         _write_batch(spark, land, "b1", [("u1", ts, HTML_A, "", "en"),
                                          ("u2", ts, HTML_B, "", "en")])
         q = start_dedup_stream(spark, land, out, ckpt, available_now=True)
