@@ -4,7 +4,11 @@
 Prints ONE JSON line:
   {"metric": "e2e_bench_seconds", "value": <total sec>, "unit": "sec",
    "queries": {"extract": sec, "q01_...": sec, ...}, "sf": <sf>,
-   "extract_docs_per_sec": <docs/sec>, "cpus": N}
+   "extract_docs_per_sec": <docs/sec>, "cpus": N, "failed": [names]}
+
+A leaf that raises is timed as -1.0, left out of ``value`` and named in
+``failed``. Only a full run (BENCH_QUERIES unset) rewrites the canonical
+record BENCH_LOCAL.json; subset runs only print.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS   (default 32),
@@ -12,8 +16,9 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      BENCH_DOCS         (override corpus size for the extraction bench).
 
 The extraction bench reads a pre-materialized parquet corpus (generation is
-excluded from timing), runs scan → salted repartition → mapInPandas → noop
-sink, and reports docs/sec.
+excluded from timing), runs scan → mapInPandas → noop sink (no shuffle;
+BENCH_REPARTITION=1 adds the salted url-hash repartition), and reports
+docs/sec.
 """
 
 from __future__ import annotations
@@ -89,6 +94,7 @@ def main() -> None:
                       extra={"spark.sql.files.maxPartitionBytes": str(mpb)})
 
     timings: dict[str, float] = {}
+    failed: list[str] = []
 
     # -- headline: extraction throughput ---------------------------------
     pages = spark.read.parquet(pages_path)
@@ -168,6 +174,7 @@ def main() -> None:
                 timings[name] = round(best, 3)
             except Exception as e:  # noqa: BLE001
                 timings[name] = -1.0
+                failed.append(name)
                 print(f"# bench error {name}: {e}", file=sys.stderr)
 
     total = round(sum(v for v in timings.values() if v > 0), 3)
@@ -183,6 +190,7 @@ def main() -> None:
         "extract_docs": n_rows,
         "extract_docs_per_sec": round(docs_per_sec, 1),
         "cpus": cpus,
+        "failed": failed,
         "queries": timings,
     }
     # attach the latest N-vs-4N scaling evidence (BENCH/scaling.py output)
@@ -214,15 +222,17 @@ def main() -> None:
             pass
     spark.stop()
     # durable copy: the printed line is the driver contract, but tail-capture
-    # truncation is real — the file is the canonical record
-    local = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH_LOCAL.json")
-    try:
-        with open(local, "w") as f:
-            json.dump(out, f, indent=1)
-            f.write("\n")
-    except OSError:
-        pass
+    # truncation is real — the file is the canonical record, so only a full
+    # run may replace it
+    if not sel:
+        local = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             "BENCH_LOCAL.json")
+        try:
+            with open(local, "w") as f:
+                json.dump(out, f, indent=1)
+                f.write("\n")
+        except OSError:
+            pass
     print(json.dumps(out))
 
 

@@ -61,7 +61,6 @@ def cmd_extract(args) -> int:
         n_buckets=args.n_buckets or (orch.n_buckets if orch else None),
         waves=args.waves or (orch.waves if orch else 1),
         salt=orch.salt if orch else None,
-        shuffle_partitions=orch.shuffle_partitions if orch else None,
         link_density_max=ext.link_density_max,
         min_chars_linked=ext.min_chars_linked,
     )

@@ -7,7 +7,8 @@ re-targeted at Spark job parameters instead of thread-pool knobs:
 
 - ``extractor.yaml``     — heuristic thresholds (link density, min chars)
 - ``orchestrator.yaml``  — partitioning: n_buckets, waves, salt,
-                           max_partition_mb, shuffle partitions
+                           max_partition_mb (the extraction shuffle is
+                           sized by AQE, not configured)
                            (replaces the reference's max_workers=4 /
                            max_concurrency=10, which tuned its thread pool —
                            ``config/extraction_orchestrator_config.py:13-21``)
@@ -41,7 +42,6 @@ class OrchestratorConfig(BaseModel):
     n_buckets: int = Field(default=64, ge=1)
     waves: int = Field(default=1, ge=1)
     salt: int = 0x5EED
-    shuffle_partitions: int | None = None
     max_partition_mb: int = Field(default=128, ge=1)
 
     FILENAME: ClassVar[str] = "orchestrator.yaml"

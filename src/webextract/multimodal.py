@@ -8,11 +8,13 @@ Arrow-batched ``mapInPandas`` stages exactly like the html path.
 The image/audio codec libraries are NOT in this container, so the *decode*
 step is stubbed behind ``Decoder`` implementations:
 
+- :class:`Decoder`       — the seam; every method raises
+  ``NotImplementedError``, which ``media_features`` records per row as
+  ``decode_unavailable``. A real cluster subclasses it with codec-backed
+  decode (Pillow/soundfile on the executors);
 - :class:`FakeDecoder`   — deterministic synthetic decode (hash-seeded pixel
   stats / waveform stats) so the full Spark plumbing — schema, partitioning,
-  UDF signature, Arrow batch shape — is real and TESTED end-to-end;
-- :class:`RealDecoder`   — raises ``NotImplementedError`` with the exact
-  dependency list (Pillow/av/soundfile), the drop-in point on a real cluster.
+  UDF signature, Arrow batch shape — is real and TESTED end-to-end.
 
 Stages (all one Arrow crossing per blob, per-row failure capture like the
 text path):
@@ -20,8 +22,6 @@ text path):
 - ``probe_media``     — magic-byte sniff → media_type column (JVM-side).
 - ``media_features``  — mapInPandas decode → fixed-size feature vector +
   width/height/duration metadata.
-- ``frame_sample``    — mapInPandas video → 0..n frame rows (UDTF-shaped:
-  one input row explodes into multiple output rows).
 """
 
 from __future__ import annotations
@@ -62,27 +62,6 @@ class Decoder:
         """→ (duration_sec, feature_vector[8])"""
         raise NotImplementedError
 
-    def video_frames(self, blob: bytes, every_n: int) -> list[bytes]:
-        """→ sampled frame blobs"""
-        raise NotImplementedError
-
-
-class RealDecoder(Decoder):
-    """The production drop-in point; this container lacks the codec libs."""
-
-    def image_stats(self, blob):
-        raise NotImplementedError(
-            "image decode requires Pillow/pyvips on the executors "
-            "(not present in this environment); swap in via media_features(decoder=...)")
-
-    def audio_stats(self, blob):
-        raise NotImplementedError(
-            "audio decode requires soundfile/librosa on the executors")
-
-    def video_frames(self, blob, every_n):
-        raise NotImplementedError(
-            "video decode requires av/ffmpeg on the executors")
-
 
 class FakeDecoder(Decoder):
     """Deterministic synthetic decode: byte-hash-derived stats.
@@ -107,11 +86,6 @@ class FakeDecoder(Decoder):
         dur = round(0.5 + h[0] / 16.0, 3)
         vec = [round(b / 255.0, 6) for b in h[2:10]]
         return dur, vec
-
-    def video_frames(self, blob, every_n):
-        h = self._h(blob)
-        n = 1 + h[0] % 5
-        return [self._h(blob + bytes([i])) for i in range(0, n, max(1, every_n))]
 
 
 FEATURES_SCHEMA = T.StructType([
@@ -165,44 +139,3 @@ def media_features(df: DataFrame, *, decoder: Decoder | None = None,
             yield pd.DataFrame(out)
 
     return probed.mapInPandas(batches, schema=FEATURES_SCHEMA)
-
-
-FRAMES_SCHEMA = T.StructType([
-    T.StructField("media_id", T.StringType()),
-    T.StructField("frame_idx", T.IntegerType()),
-    T.StructField("frame", T.BinaryType()),
-    T.StructField("status", T.StringType()),
-])
-
-
-def frame_sample(df: DataFrame, *, every_n: int = 1,
-                 decoder: Decoder | None = None,
-                 id_col: str = "media_id", blob_col: str = "blob") -> DataFrame:
-    """Video blobs → 0..n frame rows (flat-map / UDTF shape in mapInPandas)."""
-    dec = decoder or FakeDecoder()
-    src = df.select(F.col(id_col).alias("media_id"), blob_col)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"media_id": [], "frame_idx": [], "frame": [], "status": []}
-            for mid, blob in zip(pdf["media_id"], pdf[blob_col]):
-                try:
-                    frames = dec.video_frames(bytes(blob or b""), every_n)
-                    for i, fr in enumerate(frames):
-                        rows["media_id"].append(mid)
-                        rows["frame_idx"].append(i)
-                        rows["frame"].append(fr)
-                        rows["status"].append("ok")
-                except NotImplementedError:
-                    rows["media_id"].append(mid)
-                    rows["frame_idx"].append(-1)
-                    rows["frame"].append(None)
-                    rows["status"].append("decode_unavailable")
-                except Exception:  # noqa: BLE001
-                    rows["media_id"].append(mid)
-                    rows["frame_idx"].append(-1)
-                    rows["frame"].append(None)
-                    rows["status"].append("decode_error")
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(batches, schema=FRAMES_SCHEMA)

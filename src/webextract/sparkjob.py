@@ -4,7 +4,7 @@ Plan shape (SURVEY.md §3.1 translation of the reference's
 ``ExtractionOrchestrator.run``, ``extraction_orchestrator.py:211-242``)::
 
     scan(web_pages)                       # parquet/Iceberg; pruned columns
-      → [salted repartition on url hash]  # defuse domain skew (north rule)
+      → [salted url-hash rebalance]       # defuse domain skew (north rule)
       → mapInPandas(extract_batch)        # fused parse→clean→segment,
                                           #   per-row failure capture
       → write (ok rows / error rows)
@@ -14,10 +14,12 @@ Scale notes
 - ONE ``mapInPandas`` stage: html bytes cross the JVM↔Python Arrow boundary
   exactly once (the reference fuses read∘convert the same way in ``_ingest``,
   ``extraction_orchestrator.py:130-149``).
-- The repartition hashes ``xxhash64(url, salt)``: url is effectively unique,
+- The shuffle hashes ``xxhash64(url, salt)``: url is effectively unique,
   so partitions are uniform even when one domain dominates the crawl
-  (domain skew). At 10^12 docs the partition count is a function of input
-  bytes, not hardcoded — ``pick_partitions`` below.
+  (domain skew). Spark sizes it: the exchange is a ``REBALANCE``, so AQE
+  coalesces small shuffle partitions and splits any partition larger than
+  ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` — per-task bytes stay
+  bounded at any input size with no partition count to pick.
 - No per-row Python UDFs anywhere; the per-document loop lives *inside* the
   batch function over a pandas block (input hint's accepted reading).
 - Per-row failure isolation: the batch fn never throws for a document;
@@ -128,63 +130,6 @@ def _extract_batches(batches: Iterator[pd.DataFrame], link_density_max: float,
         })
 
 
-def _input_bytes(df: DataFrame) -> int:
-    """Total bytes behind the DataFrame's file scan (0 if not file-backed).
-
-    Uses the public ``inputFiles()`` API + filesystem stat — no data read,
-    no private py4j surface.
-    """
-    import os
-    from urllib.parse import urlparse
-
-    total = 0
-    for uri in df.inputFiles():
-        parsed = urlparse(uri)
-        if parsed.scheme not in ("", "file"):
-            return 0  # remote store: sizes not statable from the driver
-        path = parsed.path or uri
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return 0
-    return total
-
-
-# per-task html bytes the repartition aims for, and its floor
-_TARGET_PARTITION_BYTES = 96 * 1024 * 1024
-_MIN_PARTITIONS = 32
-
-
-def pick_partitions(df: DataFrame) -> int:
-    """Partition count from input size, not a constant.
-
-    At 100 TB this is what keeps per-task work bounded (~96 MiB of html per
-    task); locally it collapses to the floor of 32. Input bytes come from:
-
-    1. public ``df.inputFiles()`` byte-summing (local/file scans);
-    2. the optimizer's byte statistics via the private ``_jdf`` handle —
-       works for remote stores, but may break on Spark upgrades, hence last;
-    3. neither: the floor. Callers that know better pass
-       ``extract_df(num_partitions=)``.
-    """
-    nbytes = 0
-    try:
-        nbytes = _input_bytes(df)
-    except Exception:  # noqa: BLE001 — non-file source
-        nbytes = 0
-    if nbytes <= 0:
-        try:
-            nbytes = int(min(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes(),
-                1 << 60))
-        except Exception:  # noqa: BLE001 — stats unavailable → fall back
-            return _MIN_PARTITIONS
-    if nbytes <= 0:
-        return _MIN_PARTITIONS
-    return max(_MIN_PARTITIONS,
-               min(1_000_000, nbytes // _TARGET_PARTITION_BYTES + 1))
-
-
 def extract_df(pages: DataFrame, *, num_partitions: int | None = None,
                repartition: bool = True,
                link_density_max: float = 0.5,
@@ -201,14 +146,24 @@ def extract_df(pages: DataFrame, *, num_partitions: int | None = None,
     pathologically-laid-out sources (gzip WARC dumps, giant single files,
     one-domain-per-file layouts) where splits can't bound per-task work —
     5.07x on a domain-clustered layout (BENCH/SKEW.md).
+
+    The shuffle is a ``REBALANCE`` on ``xxhash64(url, DEFAULT_SALT)``, sized
+    by AQE from the bytes it actually moves. ``num_partitions=n`` instead
+    pins an exact ``repartition(n, key)``, for callers that need a fixed
+    task count (``bench.py``, ``__spark_entry__.entry``, runs with AQE
+    off).
     """
     cols = ["url", "warc_ts", "lang", "html"]  # column pruning to the scan
     if "partition_id" in pages.columns:
         cols.append("partition_id")  # lineage bucket passthrough
     df = pages.select(*cols)
     if repartition:
-        n = num_partitions or pick_partitions(df)
-        df = df.repartition(n, F.xxhash64(F.col("url"), F.lit(DEFAULT_SALT)))
+        key = F.xxhash64(F.col("url"), F.lit(DEFAULT_SALT))
+        if num_partitions:
+            df = df.repartition(num_partitions, key)
+        else:
+            # the REBALANCE hint takes column names only, hence the _k column
+            df = df.withColumn("_k", key).hint("rebalance", "_k").drop("_k")
     fn = make_extract_batches(link_density_max, min_chars_linked)
     return df.mapInPandas(fn, schema=EXTRACTED_SCHEMA)
 

@@ -148,8 +148,10 @@ def read_warc(spark: SparkSession, path: str, *,
 
     ``binaryFile`` lists + reads whole archives (unsplittable by nature);
     the parse fans each archive out to its records inside one mapInPandas
-    stage. Feed the result to ``sparkjob.extract_df(..., repartition=True)``
-    — the salted repartition is exactly the skew defense WARC input needs.
+    stage. Feed the result to ``sparkjob.extract_df`` on its default path —
+    the salted url-hash rebalance is exactly the skew defense WARC input
+    needs: one archive arrives as one task, and AQE spreads its records over
+    tasks of bounded bytes.
     """
     import pandas as pd
 

@@ -7,9 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from webextract.multimodal import (
+    Decoder,
     FakeDecoder,
-    RealDecoder,
-    frame_sample,
     media_features,
     probe_media,
 )
@@ -60,27 +59,10 @@ def test_media_features_deterministic(media):
     assert (r.width, r.height, list(r.features)) == (w, h, vec)
 
 
-def test_frame_sample_flatmap_shape(spark):
-    vids = spark.createDataFrame(
-        [("v1", b"\x1aE\xdf\xa3" + b"video-a"), ("v2", b"\x1aE\xdf\xa3" + b"video-b")],
-        "media_id string, blob binary")
-    out = frame_sample(vids, every_n=1).collect()
-    by_vid = {}
-    for r in out:
-        by_vid.setdefault(r.media_id, []).append(r)
-    # 1..5 frames per video (hash-derived), indices contiguous from 0
-    for vid, frames in by_vid.items():
-        idxs = sorted(f.frame_idx for f in frames)
-        assert idxs == list(range(len(idxs)))
-        assert all(f.status == "ok" and f.frame is not None for f in frames)
-        assert all(len(f.frame) == 32 for f in frames)  # blake2b-32 fake frames
-
-
 def test_real_decoder_raises_with_guidance(media):
-    out = media_features(media, decoder=RealDecoder())
+    out = media_features(media, decoder=Decoder())
     rows = {r.media_id: r for r in out.collect()}
     assert rows["m1"].status == "decode_unavailable"
-    assert "Pillow" in rows["m1"].error
     # the job itself still completes — unavailability is per-row data
     assert len(rows) == 6
 

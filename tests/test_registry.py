@@ -76,8 +76,6 @@ TEST_ONLY_ALLOWED = {
                       "importable on executors, which test modules are not",
     "dedup.jaccard_pairs": "pending: q14 inlines a twin of it with broadcast "
                            "hints; calling it from q14 changes q14's plan",
-    "multimodal.frame_sample": "pending: no registry entry samples frames",
-    "multimodal.RealDecoder": "pending: decoder seam that only raises",
     "tableio.ParquetIO": "pending: runner writes its paths directly",
     "tableio.IcebergIO": "pending: needs an Iceberg runtime jar",
 }

@@ -215,21 +215,6 @@ def test_null_expected_text_scores_null_on_every_metric(spark):
     assert rows["u2"].exact_match == 1.0 and rows["u2"].similarity == 1.0
 
 
-def test_pick_partitions_paths(spark, corpus_dir, pages, monkeypatch):
-    from webextract import sparkjob
-    from webextract.sparkjob import pick_partitions
-
-    # file-backed scan: sizes come from public inputFiles() stat
-    monkeypatch.setattr(sparkjob, "_TARGET_PARTITION_BYTES", 64 * 1024)
-    monkeypatch.setattr(sparkjob, "_MIN_PARTITIONS", 2)
-    n = pick_partitions(pages)
-    assert n >= 2
-    # non-file DataFrame: falls back (stats or the floor), never raises
-    monkeypatch.setattr(sparkjob, "_MIN_PARTITIONS", 7)
-    inline = spark.createDataFrame([(1,)], "a int")
-    assert pick_partitions(inline) >= 1
-
-
 def test_empty_waves_commit_cleanly(spark, tmp_path):
     """A wave whose buckets hold zero input rows must still commit (lineage
     marks the empty buckets done; reads of the run stay valid)."""

@@ -1,9 +1,11 @@
 """End-to-end Spark extraction job tests (FIXTURES.md §6 checks 1, 2, 4)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
-from webextract.sparkjob import extract_df, split_errors
+from webextract.sparkjob import DEFAULT_SALT, extract_df, split_errors
 
 
 @pytest.fixture(scope="module")
@@ -62,10 +64,37 @@ def test_failure_isolation(spark, corpus_dir, extracted):
 def test_determinism_two_runs(spark, corpus_dir):
     pages = spark.read.parquet(f"{corpus_dir}/web_pages.parquet")
     a = extract_df(pages, num_partitions=4)
-    b = extract_df(pages, num_partitions=7)  # different partitioning
     cols = ["url", "warc_ts", "text", "status"]
-    assert a.select(cols).exceptAll(b.select(cols)).count() == 0
-    assert b.select(cols).exceptAll(a.select(cols)).count() == 0
+    # different partitionings, the default one sized by AQE
+    for b in (extract_df(pages, num_partitions=7), extract_df(pages)):
+        assert a.select(cols).exceptAll(b.select(cols)).count() == 0
+        assert b.select(cols).exceptAll(a.select(cols)).count() == 0
+
+
+def test_extract_plan_has_one_salted_exchange(spark, corpus_dir):
+    """The default path's one exchange is an AQE-sized REBALANCE on the
+    salted url hash; ``num_partitions=n`` pins an exact repartition."""
+    pages = spark.read.parquet(f"{corpus_dir}/web_pages.parquet")
+    # how the physical plan prints xxhash64(url, DEFAULT_SALT); 42 is the
+    # function's own seed
+    salted = rf"xxhash64\(url#\d+, {DEFAULT_SALT}, 42\)"
+
+    def exchanges(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan, [ln for ln in plan.splitlines() if "Exchange" in ln]
+
+    plan, ex = exchanges(extract_df(pages))
+    assert len(ex) == 1, plan
+    m = re.search(r"hashpartitioning\((\S+), \d+\), REBALANCE_PARTITIONS_BY_COL",
+                  ex[0])
+    assert m, plan
+    assert re.search(rf"{salted} AS {re.escape(m.group(1))}", plan), plan
+
+    # 6, not 8: the module's cached `extracted` plan would answer for 8
+    plan, ex = exchanges(extract_df(pages, num_partitions=6))
+    assert len(ex) == 1, plan
+    assert re.search(rf"hashpartitioning\({salted}, 6\), REPARTITION_BY_NUM",
+                     ex[0]), plan
 
 
 def test_partition_id_populated(extracted):

@@ -46,10 +46,13 @@ def main():
         extract_df(pages, repartition=False),
         "ReadSchema must include html but NOT the full-page text column; "
         "no Exchange anywhere.")
-    add("extraction (skew path: salted url-hash repartition)",
-        extract_df(pages, num_partitions=16),
-        "Exactly one Exchange, keyed xxhash64(url, salt) — the explicit "
-        "partitioning the north rule requires.")
+    add("extraction (skew path: salted url-hash rebalance)",
+        extract_df(pages),
+        "Exactly one Exchange: hashpartitioning on _k = xxhash64(url, salt), "
+        "REBALANCE_PARTITIONS_BY_COL — the explicit partitioning the north "
+        "rule requires, sized by AQE (small shuffle partitions coalesced, "
+        "any above advisoryPartitionSizeInBytes split). "
+        "`extract_df(num_partitions=n)` pins REPARTITION_BY_NUM instead.")
     add("evaluation join (broadcast truth)",
         per_doc_metrics(extract_df(pages, repartition=False), truth),
         "BroadcastHashJoin with truth on the build side; predictions never "
